@@ -31,7 +31,7 @@ def calibrate() -> dict[str, float]:
 
 
 #: Empty jobs whose median is the scheduling floor.
-EMPTY_JOBS = 10
+EMPTY_JOBS = 5
 #: Seconds between two samples of the process tree's memory.
 RSS_INTERVAL = 0.2
 

@@ -37,8 +37,10 @@ def test_other_seed_other_library(tmp_path):
 def test_delta_sizes_and_families(tmp_path):
     paths = L.synth_library(str(tmp_path), 400, 3)
     assert {os.path.splitext(p)[1] for p in paths} == set(L.EXTS)
+    assert sum(p.endswith(L.ASF) for p in paths) == 400 // L.ASF_EVERY
     d = L.make_delta(str(tmp_path), paths, 3, 0)
     assert (len(d.retagged), len(d.added), len(d.deleted)) == (4, 2, 1)
+    assert not any(p.endswith(L.ASF) for p in d.added)
     assert len(L.list_files(str(tmp_path))) == 401 == len(paths)
 
 

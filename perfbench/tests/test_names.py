@@ -1,28 +1,29 @@
 """Every name the benchmark emits fits the result contract."""
 
-import json
 import re
-from pathlib import Path
 
 from perfbench import run
 
 NAME = re.compile(r"[A-Za-z0-9_.-]+")
 UNIT = re.compile(r"[A-Za-z0-9_/%.-]{1,16}")
-SPEC = Path(__file__).resolve().parents[2] / "BENCHMARK.json"
 
 
 def test_emitted_names_and_units():
-    names = [n for n, _ in run.END_TO_END] + [n for n, _ in run.per_layer_names()]
+    spec = run.spec()
+    pairs = [(m["name"], m["unit"]) for k in ("end_to_end", "per_layer") for m in spec[k]]
+    names = [n for n, _ in pairs] + [w["name"] for w in spec["workloads"]]
     assert len(names) == len(set(names))
-    for name, unit in list(run.END_TO_END) + run.per_layer_names():
+    for name in names:
         assert NAME.fullmatch(name) and len(name) <= 64, name
+    for name, unit in pairs:
         assert UNIT.fullmatch(unit), (name, unit)
-    for w in run.WORKLOADS:
-        assert NAME.fullmatch(w)
 
 
-def test_spec_lists_exactly_the_emitted_metrics():
-    spec = json.loads(SPEC.read_text())
-    assert [(m["name"], m["unit"]) for m in spec["end_to_end"]] == list(run.END_TO_END)
-    assert [(m["name"], m["unit"]) for m in spec["per_layer"]] == run.per_layer_names()
-    assert [w["name"] for w in spec["workloads"]] == list(run.WORKLOADS)
+def test_known_defects_match_only_their_reason():
+    reason = "3 latest changelog values differ from the committed table (16-track-uuid)"
+    assert run.known_defect("library_daily", "step16", reason)
+    assert not run.known_defect("library_daily", "step16", reason.replace("16-track-uuid", "02-text"))
+    assert not run.known_defect("registry_analytics", "step16", reason)
+    wma = "2 (file, column) values differ from the table in .wma files only, e.g. x"
+    assert run.known_defect("library_daily", "export", wma)
+    assert not run.known_defect("library_daily", "export", wma.replace(".wma", ".flac .wma"))
