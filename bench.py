@@ -199,7 +199,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else 0.0
 
     import __spark_entry__ as entry
-    from tagminder_spark.session import get_spark
+    from tagminder_spark.session import cpus, get_spark
 
     spark = get_spark("bench")
     qs = entry.queries()
@@ -240,7 +240,7 @@ def main() -> None:
                 "loadavg_before": [round(x, 2) for x in load_before],
                 "loadavg_after": [round(x, 2) for x in load_after],
                 "calibration": calibration,
-                "cpus": os.cpu_count(),
+                "cpus": cpus(),
             }
         )
     )

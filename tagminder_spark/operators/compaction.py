@@ -41,12 +41,15 @@ read-back equals the pure in-memory plan, row for row).
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_TARGET_BYTES = 128 << 20
+
+logger = logging.getLogger(__name__)
 
 
 def _strip_file_scheme(path: str) -> str:
@@ -230,9 +233,10 @@ class _HadoopFS:
 
         - **HDFS**: rename refuses an existing destination — a true
           atomic CAS.
-        - **RawLocalFileSystem** (``file:`` / the ``force_hadoop`` test
-          path): rename maps to ``rename(2)``, which silently REPLACES
-          an existing destination.  The pre-rename ``exists`` check plus
+        - **RawLocalFileSystem** (``file:``, which tests reach by
+          routing a local root through this backend): rename maps to
+          ``rename(2)``, which silently REPLACES an existing
+          destination.  The pre-rename ``exists`` check plus
           the post-rename READBACK below close most of that window: a
           committer whose readback shows someone else's bytes knows it
           lost and raises, so its payload is retried at the next
@@ -270,9 +274,7 @@ class _HadoopFS:
         true_cas = self._scheme in self._TRUE_CAS_SCHEMES
         if not true_cas and self._scheme not in self._warned_weak_cas:
             self._warned_weak_cas.add(self._scheme)
-            import logging
-
-            logging.getLogger(__name__).warning(
+            logger.warning(
                 "manifest commits via the Hadoop %r filesystem are not "
                 "fully multi-writer safe (rename can silently replace a "
                 "concurrent commit); run a single writer per table or "
@@ -304,18 +306,20 @@ class _HadoopFS:
             )
 
 
-def table_fs(
-    spark: SparkSession | None, root: str, force_hadoop: bool = False
-):
+def _is_local(root: str) -> bool:
+    """Whether ``root`` is served by the local filesystem: a bare path
+    or a ``file:`` URI, as opposed to a ``scheme://`` root (hdfs, s3a,
+    …).  The one place the backend choice is made — tests route local
+    roots through the Hadoop branch by replacing this predicate."""
+    return "://" not in _strip_file_scheme(root)
+
+
+def table_fs(spark: SparkSession | None, root: str):
     """Pick the directory-ops backend for ``root``: pure-Python syscalls
     for local paths, the Hadoop FileSystem API for any ``scheme://``
-    root (``force_hadoop=True`` routes a local path through the Hadoop
-    branch — how the tests pin both backends byte-identical)."""
-    import os.path
-
-    local = _strip_file_scheme(root)
-    if not force_hadoop and "://" not in local:
-        return _LocalFS(), local
+    root (:func:`_is_local`)."""
+    if _is_local(root):
+        return _LocalFS(), _strip_file_scheme(root)
     if spark is None:
         raise ValueError(
             f"remote root {root!r} needs an active SparkSession for the "
@@ -325,8 +329,7 @@ def table_fs(
 
 
 def list_data_files(
-    spark: SparkSession, path: str, suffix: str = ".parquet",
-    force_hadoop: bool = False,
+    spark: SparkSession, path: str, suffix: str = ".parquet"
 ) -> list[tuple[str, int]]:
     """Recursive ``(path, bytes)`` listing of data files under ``path``
     — a driver-side metadata operation (no executor work, no data
@@ -339,15 +342,12 @@ def list_data_files(
     difference between ~0.1 s and minutes at 50k files (measured —
     ``tools/compaction_scale_check.py``).  Remote schemes (hdfs/s3a/…)
     go through the Hadoop FileSystem API, where the iteration cost is
-    the RPC itself."""
+    the RPC itself.  Either way the returned paths are spelled under
+    ``path`` as given, so callers can take them relative to it."""
     import os
 
-    local = path
-    if local.startswith("file://"):
-        local = local[7:]
-    elif local.startswith("file:"):
-        local = local[5:]
-    if not force_hadoop and "://" not in local and os.path.isdir(local):
+    local = _strip_file_scheme(path)
+    if _is_local(path) and os.path.isdir(local):
         out: list[tuple[str, int]] = []
         stack = [local]
         while stack:
@@ -364,6 +364,9 @@ def list_data_files(
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    # the listing yields fully qualified paths (``file:/…``,
+    # ``hdfs://nn:8020/…``); swap that prefix back for ``path``
+    qualified = fs.makeQualified(jpath).toString().rstrip("/")
     out = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -371,7 +374,8 @@ def list_data_files(
         name = st.getPath().getName()
         if name.startswith(("_", ".")) or not name.endswith(suffix):
             continue
-        out.append((st.getPath().toString(), st.getLen()))
+        full = st.getPath().toString()
+        out.append((path.rstrip("/") + full[len(qualified):], st.getLen()))
     return out
 
 
@@ -597,7 +601,6 @@ def compact_partitions(
     *,
     target_bytes: int = DEFAULT_TARGET_BYTES,
     order_col: str = "doc_id",
-    force_hadoop: bool = False,
 ) -> dict:
     """Rewrite ONLY the named partition directories of a
     ``partitionBy(partition_col)`` table, leaving every other directory
@@ -629,7 +632,7 @@ def compact_partitions(
         return {"rewritten_dirs": [], "files_out": 0, "rows": 0}
     from pyspark.sql import Observation
 
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     stage = fs.join(base, ".__compact_stage__")
     if fs.exists(stage):
         fs.delete(stage)
@@ -687,10 +690,7 @@ def compact_partitions(
 
 
 def recover_interrupted_swaps(
-    root: str,
-    spark: SparkSession | None = None,
-    *,
-    force_hadoop: bool = False,
+    root: str, spark: SparkSession | None = None
 ) -> list[str]:
     """Idempotent crash recovery for :func:`compact_partitions`: any
     hidden ``.{dir}.__old__`` directory whose live counterpart is
@@ -703,7 +703,7 @@ def recover_interrupted_swaps(
     import re
 
     restored: list[str] = []
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     if not fs.exists(base):
         return restored
     for name in fs.listdir(base):

@@ -1295,27 +1295,13 @@ def _where_to_column(where: list):
     return cond
 
 
-def _where_columns(where: list) -> set:
-    """Every column a ``where`` spec references (OR branches included)."""
-    out: set = set()
-    for cond in where:
-        if _is_or(cond):
-            for disj in cond[1]:
-                out |= _where_columns(disj)
-        else:
-            out.add(cond[0])
-    return out
-
-
 def _manifest_dir(fs, base: str) -> str:
     return fs.join(base, MANIFEST_DIR)
 
 
-def list_generations(
-    spark: SparkSession | None, root: str, *, force_hadoop: bool = False
-) -> list[int]:
+def list_generations(spark: SparkSession | None, root: str) -> list[int]:
     """Sorted committed generation numbers (empty if unversioned)."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     mdir = _manifest_dir(fs, base)
     if not fs.exists(mdir):
         return []
@@ -1333,10 +1319,8 @@ def _read_raw(
     spark: SparkSession | None,
     root: str,
     gen: int,
-    *,
-    force_hadoop: bool = False,
 ) -> dict:
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     path = fs.join(_manifest_dir(fs, base), _gen_name(gen))
     return json.loads(fs.read_bytes(path))
 
@@ -1365,7 +1349,6 @@ def read_manifest(
     root: str,
     gen: int | None = None,
     *,
-    force_hadoop: bool = False,
     use_cache: bool = True,
 ) -> dict:
     """Load one manifest RESOLVED to its full file list:
@@ -1410,11 +1393,11 @@ def read_manifest(
     file's mtime, so a recreated table never serves stale entries).
     Callers must not mutate the returned containers."""
     if gen is None:
-        gens = list_generations(spark, root, force_hadoop=force_hadoop)
+        gens = list_generations(spark, root)
         if not gens:
             raise FileNotFoundError(f"no manifest under {root!r}")
         gen = gens[-1]
-    fs_, base_ = table_fs(spark, root, force_hadoop)
+    fs_, base_ = table_fs(spark, root)
     key = None
     if use_cache:
         try:
@@ -1431,7 +1414,7 @@ def read_manifest(
     chain: list[dict] = []
     cur = gen
     while True:
-        man = _read_raw(spark, root, cur, force_hadoop=force_hadoop)
+        man = _read_raw(spark, root, cur)
         chain.append(man)
         if "files" in man:  # full snapshot — chain base
             files = {p: sz for p, sz in man["files"]}
@@ -1504,15 +1487,13 @@ def _chain_gens(
     spark: SparkSession | None,
     root: str,
     gen: int,
-    *,
-    force_hadoop: bool = False,
 ) -> list[int]:
     """Generation numbers this gen's resolution depends on (itself
     included), newest first."""
     out = [gen]
     cur = gen
     while True:
-        man = _read_raw(spark, root, cur, force_hadoop=force_hadoop)
+        man = _read_raw(spark, root, cur)
         if "files" in man or man.get("parent", 0) == 0:
             return out
         cur = man["parent"]
@@ -1532,7 +1513,6 @@ def commit_manifest(
     change_key: str | None = None,
     deleted_changes: list[tuple[str, int]] | None = None,
     op: str | None = None,
-    force_hadoop: bool = False,
 ) -> int:
     """Commit ``files`` (relative-path, size) as the next generation.
 
@@ -1559,9 +1539,9 @@ def commit_manifest(
     they never fold into the file list and are reclaimed with their
     generation's manifest.
     """
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     if parent is None:
-        gens = list_generations(spark, root, force_hadoop=force_hadoop)
+        gens = list_generations(spark, root)
         parent = gens[-1] if gens else 0
     gen = parent + 1
     mdir = _manifest_dir(fs, base)
@@ -1621,7 +1601,6 @@ def commit_delta(
     changes: list[tuple[str, int]] | None = None,
     change_key: str | None = None,
     op: str | None = None,
-    force_hadoop: bool = False,
 ) -> int:
     """Commit a DELTA generation: only the added (rel, size) entries
     and removed rel paths, plus the parent pointer — O(|change|) bytes
@@ -1633,9 +1612,9 @@ def commit_delta(
     :func:`materialize_deletes`) — also O(|change|).
     ``changes``/``change_key`` attach CDC provenance exactly as in
     :func:`commit_manifest`."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     if parent is None:
-        gens = list_generations(spark, root, force_hadoop=force_hadoop)
+        gens = list_generations(spark, root)
         parent = gens[-1] if gens else 0
     gen = parent + 1
     mdir = _manifest_dir(fs, base)
@@ -1681,27 +1660,25 @@ def commit_delta(
 def checkpoint_manifest(
     spark: SparkSession | None,
     root: str,
-    *,
-    force_hadoop: bool = False,
 ) -> int | None:
     """Collapse the current delta chain into a full snapshot at the
     next generation (Delta Lake's checkpoint).  No-op (returns None)
     when the current generation is already full.  Bounds both read-time
     chain folding and how far back :func:`expire_snapshots` must retain
     manifest files."""
-    gens = list_generations(spark, root, force_hadoop=force_hadoop)
+    gens = list_generations(spark, root)
     if not gens:
         return None
-    raw = _read_raw(spark, root, gens[-1], force_hadoop=force_hadoop)
+    raw = _read_raw(spark, root, gens[-1])
     if "files" in raw:
         return None
-    man = read_manifest(spark, root, gens[-1], force_hadoop=force_hadoop)
+    man = read_manifest(spark, root, gens[-1])
     return commit_manifest(
         spark, root,
         [(p, sz) for p, sz in man["files"]],
         parent=gens[-1], stats=man["stats"],
         seqs=man["seqs"] or None, deletes=man["deletes"] or None,
-        op="checkpoint", force_hadoop=force_hadoop,
+        op="checkpoint",
     )
 
 
@@ -1711,7 +1688,6 @@ def init_manifest(
     *,
     stats_cols: tuple[str, ...] | None = None,
     string_bound_len: int = STRING_BOUND_LEN,
-    force_hadoop: bool = False,
 ) -> int:
     """Bootstrap versioning on an existing directory table: commit
     generation 1 from a full listing.  Refuses if already versioned
@@ -1719,9 +1695,9 @@ def init_manifest(
     runs one footer pass over the listing and commits per-file min/max
     bounds for those columns (:func:`collect_file_stats`) so the very
     first snapshot is already skippable."""
-    if list_generations(spark, root, force_hadoop=force_hadoop):
+    if list_generations(spark, root):
         raise ValueError(f"{root!r} is already manifest-versioned")
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     rel = [
         (posixpath.relpath(p.replace("\\", "/"), base.replace("\\", "/")), sz)
         for p, sz in list_data_files(spark, root)
@@ -1732,10 +1708,7 @@ def init_manifest(
                            string_bound_len=string_bound_len)
         if stats_cols else None
     )
-    return commit_manifest(
-        spark, root, rel, parent=0, stats=stats, op="init",
-        force_hadoop=force_hadoop,
-    )
+    return commit_manifest(spark, root, rel, parent=0, stats=stats, op="init")
 
 
 def _partition_spec(rel: str) -> tuple:
@@ -2044,7 +2017,6 @@ def _read_entries_with_deletes(
     entries: list,
     man: dict,
     *,
-    merge_schema: bool = False,
     with_positions: bool = False,
 ) -> DataFrame:
     """Plan ``entries`` as an explicit file list with the manifest's
@@ -2086,10 +2058,9 @@ def _read_entries_with_deletes(
     )
 
     def _plain(ents: list) -> DataFrame:
-        reader = spark.read.option("basePath", base)
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[fs.join(base, rel) for rel, _ in ents])
+        df = spark.read.option("basePath", base).parquet(
+            *[fs.join(base, rel) for rel, _ in ents]
+        )
         return _with_positions(df, prefix) if with_positions else df
 
     if len(groups) == 1 and not deletes:
@@ -2151,9 +2122,7 @@ def _read_entries_with_deletes(
     out = parts[0]
     multi_spec = len({spec for spec, _ in groups}) > 1
     for p in parts[1:]:
-        out = out.unionByName(
-            p, allowMissingColumns=merge_schema or multi_spec
-        )
+        out = out.unionByName(p, allowMissingColumns=multi_spec)
     return out
 
 
@@ -2163,7 +2132,6 @@ def snapshot_read(
     gen: int | None = None,
     *,
     where: list[tuple] | None = None,
-    force_hadoop: bool = False,
 ) -> DataFrame:
     """Read the table PINNED to one manifest generation: Spark gets the
     explicit file list (never a directory listing), so concurrent
@@ -2188,18 +2156,12 @@ def snapshot_read(
     appends EVOLVED the partition spec (a later batch used a different
     ``partitionBy``) read correctly too: files group per spec and a
     partition column one spec lacks comes back NULL for its rows."""
-    man = read_manifest(spark, root, gen, force_hadoop=force_hadoop)
-    fs, base = table_fs(spark, root, force_hadoop)
+    man = read_manifest(spark, root, gen)
+    fs, base = table_fs(spark, root)
     entries = man["files"]
     if where:
-        pruned = prune_manifest(
-            man, where,
-            list_transforms(spark, root, force_hadoop=force_hadoop),
-        )
-        kept = _bloom_prune(
-            spark, root, pruned["files"], where,
-            force_hadoop=force_hadoop,
-        )
+        pruned = prune_manifest(man, where, list_transforms(spark, root))
+        kept = _bloom_prune(spark, root, pruned["files"], where)
         if kept:
             entries = kept
         elif entries:
@@ -2223,29 +2185,22 @@ def snapshot_scan_plan(
     gen: int | None = None,
     *,
     where: list[tuple] | None = None,
-    force_hadoop: bool = False,
 ) -> dict:
     """What :func:`snapshot_read` would scan: ``{"scanned": total
     manifest files, "skipped": files pruned by stats/partition bounds,
     "files": kept entries}`` — the observability hook the data-skipping
     gate asserts on (strictly fewer files for a selective predicate).
     Driver-side manifest read only; no data IO."""
-    man = read_manifest(spark, root, gen, force_hadoop=force_hadoop)
+    man = read_manifest(spark, root, gen)
     if not where:
         return {
             "files": man["files"], "skipped": 0,
             "scanned": len(man["files"]),
             "delete_files": len(man["deletes"]),
         }
-    plan = prune_manifest(
-        man, where,
-        list_transforms(spark, root, force_hadoop=force_hadoop),
-    )
+    plan = prune_manifest(man, where, list_transforms(spark, root))
     if spark is not None:
-        kept = _bloom_prune(
-            spark, root, plan["files"], where,
-            force_hadoop=force_hadoop,
-        )
+        kept = _bloom_prune(spark, root, plan["files"], where)
         plan["bloom_skipped"] = len(plan["files"]) - len(kept)
         plan["skipped"] += plan["bloom_skipped"]
         plan["files"] = kept
@@ -2285,7 +2240,7 @@ def plan_compaction_manifest(
 
 
 def _move_stage_files(
-    spark: SparkSession, fs, stage: str, base: str, *, force_hadoop: bool
+    spark: SparkSession, fs, stage: str, base: str
 ) -> list[tuple[str, int]]:
     """Move every staged data file into the live table under its
     partition directory, keeping Spark's UUID-unique file names (no
@@ -2313,7 +2268,6 @@ def append_files(
     max_retries: int = 5,
     stats_cols: tuple[str, ...] | None = None,
     string_bound_len: int = STRING_BOUND_LEN,
-    force_hadoop: bool = False,
 ) -> dict:
     """Append ``df`` to a versioned table as one manifest commit:
     write to a hidden stage dir, move the (UUID-named) files into the
@@ -2349,21 +2303,18 @@ def append_files(
     after ``max_retries`` consecutive losses the conflict is
     re-raised.  Maintenance (``compact_partitions_versioned``) does
     NOT retry — it REPLACES files, so a lost CAS there means the table
-    changed under it and the caller must re-plan;
-    :func:`compact_with_replan` is that caller (bounded
-    re-plan-and-retry against the fresh snapshot)."""
+    changed under it: it raises ``FileExistsError`` and the caller must
+    re-plan against the fresh snapshot."""
     import uuid
 
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     stage = fs.join(base, f".__ingest_stage_{uuid.uuid4().hex[:8]}__")
     writer = df.write.mode("overwrite")
     if partition_col:
         writer = writer.partitionBy(partition_col)
     writer.parquet(stage)
     try:
-        new = _move_stage_files(
-            spark, fs, stage, base, force_hadoop=force_hadoop
-        )
+        new = _move_stage_files(spark, fs, stage, base)
     finally:
         fs.delete(stage, ignore_errors=True)
     stats = (
@@ -2374,7 +2325,7 @@ def append_files(
     )
 
     for attempt in range(max_retries + 1):
-        gens = list_generations(spark, root, force_hadoop=force_hadoop)
+        gens = list_generations(spark, root)
         parent = gens[-1] if gens else 0
         # merge-on-read interplay: when the table carries pending
         # equality deletes, this batch must commit with its OWN
@@ -2384,16 +2335,14 @@ def append_files(
         # between attempts; the manifest fold is driver-side and cached.
         seqs = None
         if parent:
-            man_cur = read_manifest(
-                spark, root, parent, force_hadoop=force_hadoop
-            )
+            man_cur = read_manifest(spark, root, parent)
             if man_cur["deletes"]:
                 seqs = {rel: parent + 1 for rel, _ in new}
         try:
             gen = commit_delta(
                 spark, root, new,
                 parent=parent, stats=stats, seqs=seqs,
-                op="append", force_hadoop=force_hadoop,
+                op="append",
             )
             break
         except FileExistsError:
@@ -2404,68 +2353,12 @@ def append_files(
             "commit_retries": attempt}
 
 
-def snapshot_read_merged(
-    spark: SparkSession,
-    root: str,
-    gen: int | None = None,
-    *,
-    where: list[tuple] | None = None,
-    force_hadoop: bool = False,
-) -> DataFrame:
-    """:func:`snapshot_read` with schema merging — for tables whose
-    appends evolved the schema (a later batch added columns).  Parquet
-    handles the union natively (``mergeSchema``: missing columns read
-    as NULL from older files); the manifest only has to keep listing
-    files, which is why append-time schema evolution is free here.
-    Costs a footer read per file at planning — use the plain
-    :func:`snapshot_read` when the schema is known to be uniform.
-
-    ``where`` gives evolved tables the SAME manifest-level data
-    skipping as the plain read (prune by committed bounds, then apply
-    the exact residual filter) — a predicate on a column some older
-    files lack still prunes/filters correctly because those files
-    surface the column as NULL, which never satisfies a comparison.
-    Caveat (inherent to mergeSchema): the result schema is the UNION
-    of the files actually read, so pruning can narrow it — a predicate
-    whose kept files all predate an added column returns rows without
-    that column.  Callers needing a stable evolved schema should
-    select it explicitly against the unpruned read's schema."""
-    man = read_manifest(spark, root, gen, force_hadoop=force_hadoop)
-    fs, base = table_fs(spark, root, force_hadoop)
-    entries = man["files"]
-    if where:
-        pruned = prune_manifest(
-            man, where,
-            list_transforms(spark, root, force_hadoop=force_hadoop),
-        )
-        if pruned["files"]:
-            entries = pruned["files"]
-        elif entries:
-            entries = entries[:1]  # schema anchor; residual yields empty
-    if not entries:
-        raise ValueError(f"manifest gen {man['generation']} lists no files")
-    df = _read_entries_with_deletes(
-        spark, fs, base, entries, man, merge_schema=True
-    )
-    if where:
-        # an evolved table may prune away every file CARRYING a
-        # predicate column; the merged schema then lacks it and the
-        # residual would not resolve — but every surviving row reads
-        # that column as NULL, which no comparison satisfies: empty.
-        if _where_columns(where) - set(df.columns):
-            return df.filter(F.lit(False))
-        df = df.filter(_where_to_column(where))
-    return df
-
-
 def register_transform(
     spark: SparkSession | None,
     root: str,
     kind: str,
     col: str,
     arg: int,
-    *,
-    force_hadoop: bool = False,
 ) -> str:
     """Declare a HIDDEN-PARTITIONING transform on the table: the
     derived column named by :func:`partition_transform_column` is a
@@ -2476,7 +2369,7 @@ def register_transform(
     Immutable once registered (CAS file beside the manifests); returns
     the derived column name to ``partitionBy`` when writing."""
     _expr, pcol = partition_transform_column(kind, col, arg)
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     mdir = _manifest_dir(fs, base)
     fs.mkdirs(mdir)
     doc = {"pcol": pcol, "kind": kind, "col": col, "arg": int(arg)}
@@ -2490,12 +2383,10 @@ def register_transform(
 def list_transforms(
     spark: SparkSession | None,
     root: str,
-    *,
-    force_hadoop: bool = False,
 ) -> dict[str, tuple]:
     """``{derived column: (kind, source column, arg)}`` for every
     registered hidden-partitioning transform."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     mdir = _manifest_dir(fs, base)
     out: dict[str, tuple] = {}
     if not fs.exists(mdir):
@@ -2507,101 +2398,6 @@ def list_transforms(
     return out
 
 
-def metadata_table(
-    spark: SparkSession,
-    root: str,
-    kind: str,
-    gen: int | None = None,
-    *,
-    force_hadoop: bool = False,
-) -> DataFrame:
-    """Iceberg-style METADATA TABLES — the table's own bookkeeping as
-    DataFrames, so operators inspect a 800k-file table with the same
-    engine they query data with (`SELECT ... FROM t.files WHERE ...`):
-
-    - ``"files"``: one row per data file of the (pinned) snapshot —
-      rel path, bytes, commit sequence, partition values as a map, and
-      per-column [lo, hi] bounds as strings;
-    - ``"history"``: one row per retained generation (op, wall time,
-      files/bytes, add/remove deltas, pending delete files);
-    - ``"partitions"``: per-partition-directory file count and bytes
-      (the compaction planner's view);
-    - ``"deletes"``: pending equality-delete files (rel, sequence,
-      key column);
-    - ``"tags"`` / ``"staged"``: named refs and write-audit-publish
-      batches.
-
-    All driver-side manifest reads — no data IO."""
-    man = read_manifest(spark, root, gen, force_hadoop=force_hadoop)
-    if kind == "files":
-        seqs = man["seqs"]
-        stats = man["stats"]
-        rows = [
-            {
-                "file": rel,
-                "bytes": int(sz),
-                "seq": int(seqs.get(rel, 0)),
-                "partition": _partition_values(rel) or None,
-                "bounds": {
-                    c: f"[{b[0]}, {b[1]}]"
-                    for c, b in stats.get(rel, {}).items()
-                } or None,
-            }
-            for rel, sz in man["files"]
-        ]
-        schema = ("file string, bytes long, seq int, "
-                  "partition map<string,string>, bounds map<string,string>")
-    elif kind == "history":
-        rows = table_history(spark, root, force_hadoop=force_hadoop)
-        schema = ("generation int, ts double, op string, parent int, "
-                  "files int, bytes long, added_files int, "
-                  "removed_files int, delete_files int")
-        rows = [{k: r.get(k) for k in (
-            "generation", "ts", "op", "parent", "files", "bytes",
-            "added_files", "removed_files", "delete_files",
-        )} for r in rows]
-    elif kind == "partitions":
-        agg: dict[str, list[int]] = {}
-        for rel, sz in man["files"]:
-            d = posixpath.dirname(rel)
-            a = agg.setdefault(d, [0, 0])
-            a[0] += 1
-            a[1] += int(sz)
-        rows = [
-            {"partition_dir": d, "files": n, "bytes": b}
-            for d, (n, b) in sorted(agg.items())
-        ]
-        schema = "partition_dir string, files int, bytes long"
-    elif kind == "deletes":
-        rows = [
-            {"file": rel, "seq": int(seq), "key": keycol}
-            for rel, seq, keycol in man["deletes"]
-        ]
-        schema = "file string, seq int, key string"
-    elif kind == "tags":
-        rows = [
-            {"tag": t, "generation": g}
-            for t, g in sorted(
-                list_tags(spark, root, force_hadoop=force_hadoop).items()
-            )
-        ]
-        schema = "tag string, generation int"
-    elif kind == "staged":
-        fs, base = table_fs(spark, root, force_hadoop)
-        rows = []
-        for sid in list_staged(spark, root, force_hadoop=force_hadoop):
-            _p, doc = _staged_doc(fs, base, sid)
-            rows.append({
-                "staged_id": sid,
-                "files": len(doc["adds"]),
-                "bytes": sum(int(sz) for _r, sz in doc["adds"]),
-            })
-        schema = "staged_id string, files int, bytes long"
-    else:
-        raise ValueError(f"unknown metadata table {kind!r}")
-    return spark.createDataFrame(rows, schema)
-
-
 def stage_append(
     spark: SparkSession,
     df: DataFrame,
@@ -2610,7 +2406,6 @@ def stage_append(
     partition_col: str | None = None,
     stats_cols: tuple[str, ...] | None = None,
     string_bound_len: int = STRING_BOUND_LEN,
-    force_hadoop: bool = False,
 ) -> str:
     """WRITE-AUDIT-PUBLISH, write step (Iceberg's WAP pattern): land
     ``df``'s files in the table directories and record them in a
@@ -2625,11 +2420,11 @@ def stage_append(
     the staged doc IS the reference.  Returns the staged id."""
     import uuid
 
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     # contract check up front, not at publish: a staged batch whose
     # columns don't cover the table's would only fail AFTER the audit
     try:
-        existing = snapshot_read(spark, root, force_hadoop=force_hadoop)
+        existing = snapshot_read(spark, root)
         missing = [c for c in existing.columns if c not in df.columns]
         if missing:
             raise ValueError(
@@ -2649,9 +2444,7 @@ def stage_append(
         writer = writer.partitionBy(partition_col)
     writer.parquet(stage)
     try:
-        new = _move_stage_files(
-            spark, fs, stage, base, force_hadoop=force_hadoop
-        )
+        new = _move_stage_files(spark, fs, stage, base)
     finally:
         fs.delete(stage, ignore_errors=True)
     stats = (
@@ -2682,11 +2475,9 @@ def _staged_doc(fs, base: str, staged_id: str) -> tuple[str, dict]:
 def list_staged(
     spark: SparkSession | None,
     root: str,
-    *,
-    force_hadoop: bool = False,
 ) -> list[str]:
     """Ids of every batch currently staged on the table."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     mdir = _manifest_dir(fs, base)
     if not fs.exists(mdir):
         return []
@@ -2701,12 +2492,10 @@ def read_staged(
     spark: SparkSession,
     root: str,
     staged_id: str,
-    *,
-    force_hadoop: bool = False,
 ) -> DataFrame:
     """The staged batch, for the AUDIT step — exactly the rows that
     would become visible on publish."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     _path, doc = _staged_doc(fs, base, staged_id)
     return spark.read.option("basePath", base).parquet(
         *[fs.join(base, rel) for rel, _ in doc["adds"]]
@@ -2719,30 +2508,27 @@ def publish_staged(
     staged_id: str,
     *,
     max_retries: int = 5,
-    force_hadoop: bool = False,
 ) -> dict:
     """PUBLISH step: one delta commit makes the staged batch visible
     atomically (append semantics — retried through lost CAS like
     :func:`append_files`, sequence-stamped when deletes are pending);
     the staged doc is then removed."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     path, doc = _staged_doc(fs, base, staged_id)
     adds = [(rel, sz) for rel, sz in doc["adds"]]
     stats = doc.get("stats")
     for attempt in range(max_retries + 1):
-        gens = list_generations(spark, root, force_hadoop=force_hadoop)
+        gens = list_generations(spark, root)
         parent = gens[-1] if gens else 0
         seqs = None
         if parent:
-            man_cur = read_manifest(
-                spark, root, parent, force_hadoop=force_hadoop
-            )
+            man_cur = read_manifest(spark, root, parent)
             if man_cur["deletes"]:
                 seqs = {rel: parent + 1 for rel, _ in adds}
         try:
             gen = commit_delta(
                 spark, root, adds, parent=parent, stats=stats,
-                seqs=seqs, op="append", force_hadoop=force_hadoop,
+                seqs=seqs, op="append",
             )
             break
         except FileExistsError:
@@ -2757,12 +2543,10 @@ def abandon_staged(
     spark: SparkSession,
     root: str,
     staged_id: str,
-    *,
-    force_hadoop: bool = False,
 ) -> dict:
     """Abandon the staged batch: its data files are deleted and the
     staged doc removed — the table never saw it."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     path, doc = _staged_doc(fs, base, staged_id)
     removed = []
     for rel, _ in doc["adds"]:
@@ -2779,8 +2563,6 @@ def create_tag(
     root: str,
     name: str,
     gen: int | None = None,
-    *,
-    force_hadoop: bool = False,
 ) -> int:
     """Pin a generation under an immutable NAME — Iceberg's snapshot
     tags: ``create_tag(root, "training-run-07")`` freezes the exact
@@ -2788,18 +2570,17 @@ def create_tag(
     generations (and their files) regardless of ``keep_last``, and
     :func:`resolve_tag` turns the name back into a generation for
     :func:`snapshot_read`.  The tag file is a create-if-absent CAS like
-    every commit — re-tagging an existing name raises; :func:`drop_tag`
-    releases it."""
+    every commit — re-tagging an existing name raises."""
     if not name or "/" in name or "\\" in name:
         raise ValueError(f"invalid tag name {name!r}")
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     if gen is None:
-        gens = list_generations(spark, root, force_hadoop=force_hadoop)
+        gens = list_generations(spark, root)
         if not gens:
             raise FileNotFoundError(f"no manifest under {root!r}")
         gen = gens[-1]
     else:
-        _read_raw(spark, root, gen, force_hadoop=force_hadoop)  # exists?
+        _read_raw(spark, root, gen)  # exists?
     doc = {"tag": name, "generation": int(gen)}
     fs.write_new(
         fs.join(_manifest_dir(fs, base), f"tag_{name}.json"),
@@ -2811,11 +2592,9 @@ def create_tag(
 def list_tags(
     spark: SparkSession | None,
     root: str,
-    *,
-    force_hadoop: bool = False,
 ) -> dict[str, int]:
     """``{tag name: generation}`` for every tag on the table."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     mdir = _manifest_dir(fs, base)
     out: dict[str, int] = {}
     if not fs.exists(mdir):
@@ -2831,29 +2610,11 @@ def resolve_tag(
     spark: SparkSession | None,
     root: str,
     name: str,
-    *,
-    force_hadoop: bool = False,
 ) -> int:
-    tags = list_tags(spark, root, force_hadoop=force_hadoop)
+    tags = list_tags(spark, root)
     if name not in tags:
         raise ValueError(f"no tag {name!r} on {root!r}")
     return tags[name]
-
-
-def drop_tag(
-    spark: SparkSession | None,
-    root: str,
-    name: str,
-    *,
-    force_hadoop: bool = False,
-) -> None:
-    """Release a tag; the generation becomes subject to normal
-    retention at the next :func:`expire_snapshots`."""
-    fs, base = table_fs(spark, root, force_hadoop)
-    path = fs.join(_manifest_dir(fs, base), f"tag_{name}.json")
-    if not fs.exists(path):
-        raise ValueError(f"no tag {name!r} on {root!r}")
-    fs.delete(path)
 
 
 #: commit ops that change no logical rows — table_changes skips them
@@ -2897,14 +2658,11 @@ def table_changes(
     spark: SparkSession,
     root: str,
     from_gen: int,
-    to_gen: int | None = None,
-    *,
-    force_hadoop: bool = False,
 ) -> DataFrame:
-    """Row-level CHANGE FEED between two generations — Delta's
+    """Row-level CHANGE FEED since a generation — Delta's
     ``table_changes`` / Iceberg's incremental read, from the manifest's
     per-commit provenance: each commit after ``from_gen`` (exclusive)
-    up to ``to_gen`` (inclusive, default current) contributes
+    up to the current generation (inclusive) contributes
 
     - ``append``: its added files' rows as ``_change_type="insert"``;
     - ``merge-mor``: its added rows as inserts PLUS its equality-delete
@@ -2947,24 +2705,24 @@ def table_changes(
     commit a dynamic-partition write can repeat a basename across
     partition dirs, but those map to the same generation) — a
     200-commit sync plans ~3 scans instead of a 200-branch union."""
-    fs, base = table_fs(spark, root, force_hadoop)
-    if to_gen is None:
-        gens = list_generations(spark, root, force_hadoop=force_hadoop)
-        if not gens:
-            raise FileNotFoundError(f"no manifest under {root!r}")
-        to_gen = gens[-1]
+    fs, base = table_fs(spark, root)
+    gens = list_generations(spark, root)
+    if not gens:
+        raise FileNotFoundError(f"no manifest under {root!r}")
+    to_gen = gens[-1]
     if to_gen < from_gen:
-        raise ValueError(f"to_gen {to_gen} < from_gen {from_gen}")
+        raise ValueError(
+            f"from_gen {from_gen} is past the current generation {to_gen}"
+        )
     # schema anchor: the table as of from_gen (columns for NULL fill)
-    anchor = snapshot_read(spark, root, from_gen,
-                           force_hadoop=force_hadoop)
+    anchor = snapshot_read(spark, root, from_gen)
     cols = anchor.columns
 
     ins_specs: list[tuple[str, int]] = []  # (rel, gen)
     del_specs: dict[tuple[str, bool], list[tuple[str, int]]] = {}
     preimg_specs: list[tuple[str, int]] = []  # full-preimage deletes
     for g in range(from_gen + 1, to_gen + 1):
-        raw = _read_raw(spark, root, g, force_hadoop=force_hadoop)
+        raw = _read_raw(spark, root, g)
         op = raw.get("op")
         if op in _ROW_PRESERVING_OPS:
             continue
@@ -3072,67 +2830,10 @@ def table_changes(
     return out.select(*cols, "_change_type", "_commit_gen")
 
 
-def sync_changes(
-    spark: SparkSession,
-    root: str,
-    cursor_path: str,
-    *,
-    force_hadoop: bool = False,
-) -> tuple[DataFrame, "int | None", callable]:
-    """Incremental-consumer harness over :func:`table_changes`: read
-    the cursor (the last generation this consumer processed), return
-    ``(feed, to_gen, ack)`` where ``feed`` is the change feed since the
-    cursor and ``ack()`` advances the cursor to ``to_gen`` — called by
-    the consumer ONLY after it has durably applied the feed, so a crash
-    between read and ack replays the same changes (at-least-once, the
-    standard CDC consumer contract).  ``to_gen`` is None (and the feed
-    empty) when there is nothing new.  First run (no cursor file)
-    starts from the oldest retained generation — the consumer sees the
-    table's current rows as inserts via the commits that created them
-    only if those commits are retained; otherwise bootstrap with a full
-    :func:`snapshot_read` and write the cursor at that generation."""
-    fs, _base = table_fs(spark, root, force_hadoop)
-    gens = list_generations(spark, root, force_hadoop=force_hadoop)
-    if not gens:
-        raise FileNotFoundError(f"no manifest under {root!r}")
-    cur_fs, cur_local = table_fs(spark, cursor_path, force_hadoop)
-    if cur_fs.exists(cur_local):
-        from_gen = int(json.loads(cur_fs.read_bytes(cur_local))["gen"])
-    else:
-        from_gen = gens[0]
-    to_gen = gens[-1]
-    if to_gen <= from_gen:
-        empty = table_changes(
-            spark, root, to_gen, to_gen, force_hadoop=force_hadoop
-        )
-        return empty, None, lambda: None
-
-    feed = table_changes(
-        spark, root, from_gen, to_gen, force_hadoop=force_hadoop
-    )
-
-    def ack() -> None:
-        payload = json.dumps({"gen": to_gen}).encode()
-        # overwrite-by-replace: the cursor is the consumer's own state,
-        # single-writer by contract
-        parent = posixpath.dirname(cur_local)
-        if parent and not cur_fs.exists(parent):
-            cur_fs.mkdirs(parent)
-        tmp = cur_local + ".tmp"
-        cur_fs.delete(tmp, ignore_errors=True)
-        cur_fs.write_new(tmp, payload)
-        cur_fs.delete(cur_local, ignore_errors=True)
-        cur_fs.rename(tmp, cur_local)
-
-    return feed, to_gen, ack
-
-
 def generation_as_of(
     spark: SparkSession | None,
     root: str,
     ts: float,
-    *,
-    force_hadoop: bool = False,
 ) -> int:
     """The newest generation committed at-or-before unix time ``ts`` —
     Iceberg's ``FOR TIMESTAMP AS OF`` resolution.  Commit time comes
@@ -3140,11 +2841,11 @@ def generation_as_of(
     from before that field existed fall back to the manifest FILE's
     mtime (weaker: a copy/rsync can disturb it).  Raises if the table
     has no generation that old."""
-    fs, base = table_fs(spark, root, force_hadoop)
-    gens = list_generations(spark, root, force_hadoop=force_hadoop)
+    fs, base = table_fs(spark, root)
+    gens = list_generations(spark, root)
     best = None
     for g in gens:
-        raw = _read_raw(spark, root, g, force_hadoop=force_hadoop)
+        raw = _read_raw(spark, root, g)
         committed = raw.get("ts")
         from_manifest = committed is not None
         if committed is None:
@@ -3171,15 +2872,12 @@ def snapshot_as_of(
     ts: float,
     *,
     where: list[tuple] | None = None,
-    force_hadoop: bool = False,
 ) -> DataFrame:
     """Time travel: :func:`snapshot_read` pinned to the generation that
     was current at unix time ``ts`` (``FOR TIMESTAMP AS OF``).  Subject
     to retention — an expired generation cannot be read."""
-    gen = generation_as_of(spark, root, ts, force_hadoop=force_hadoop)
-    return snapshot_read(
-        spark, root, gen, where=where, force_hadoop=force_hadoop
-    )
+    gen = generation_as_of(spark, root, ts)
+    return snapshot_read(spark, root, gen, where=where)
 
 
 def rollback(
@@ -3188,7 +2886,6 @@ def rollback(
     to_gen: int,
     *,
     record_changes: bool = True,
-    force_hadoop: bool = False,
 ) -> int:
     """Roll the table back to ``to_gen`` by committing a NEW generation
     with that generation's exact file list — history is never rewritten
@@ -3213,7 +2910,7 @@ def rollback(
     state still diverges (nothing this side can change) is CDC skipped
     and the feed keeps its documented raise across this commit — never
     a wrong delta."""
-    man = read_manifest(spark, root, to_gen, force_hadoop=force_hadoop)
+    man = read_manifest(spark, root, to_gen)
     changes = deleted = None
     if record_changes and spark is not None:
 
@@ -3230,7 +2927,7 @@ def rollback(
             )
             return cur_rels, tgt_rels, same
 
-        cur = read_manifest(spark, root, force_hadoop=force_hadoop)
+        cur = read_manifest(spark, root)
         cur_rels, tgt_rels, same_state = _state(cur)
         if (not same_state and cur["deletes"] and not man["deletes"]):
             # current-side divergence is repairable: fold the pending
@@ -3244,16 +2941,11 @@ def rollback(
                 if len(only) == 1:
                     pcol = only[0]
             if pcol is not None or specs == {()}:
-                materialize_deletes(
-                    spark, root, partition_col=pcol,
-                    force_hadoop=force_hadoop,
-                )
-                cur = read_manifest(
-                    spark, root, force_hadoop=force_hadoop
-                )
+                materialize_deletes(spark, root, partition_col=pcol)
+                cur = read_manifest(spark, root)
                 cur_rels, tgt_rels, same_state = _state(cur)
         if same_state:
-            fs, base = table_fs(spark, root, force_hadoop)
+            fs, base = table_fs(spark, root)
             removed = [e for e in cur["files"] if e[0] not in tgt_rels]
             added = [e for e in man["files"] if e[0] not in cur_rels]
             deleted = (
@@ -3280,15 +2972,13 @@ def rollback(
         stats=man["stats"],
         seqs=man["seqs"] or None, deletes=man["deletes"] or None,
         changes=changes, deleted_changes=deleted,
-        op="rollback", force_hadoop=force_hadoop,
+        op="rollback",
     )
 
 
 def table_history(
     spark: SparkSession | None,
     root: str,
-    *,
-    force_hadoop: bool = False,
 ) -> list[dict]:
     """One row per retained generation — files, bytes, and the delta
     against the parent (the ``DESCRIBE HISTORY`` a maintenance
@@ -3296,9 +2986,9 @@ def table_history(
     reads only; no data IO."""
     out: list[dict] = []
     prev_files: set[str] = set()
-    for g in list_generations(spark, root, force_hadoop=force_hadoop):
-        man = read_manifest(spark, root, g, force_hadoop=force_hadoop)
-        raw = _read_raw(spark, root, g, force_hadoop=force_hadoop)
+    for g in list_generations(spark, root):
+        man = read_manifest(spark, root, g)
+        raw = _read_raw(spark, root, g)
         cur = {rel for rel, _ in man["files"]}
         out.append({
             "generation": g,
@@ -3327,7 +3017,6 @@ def compact_partitions_versioned(
     zorder_bits: int = 6,
     stats_cols: tuple[str, ...] | None = None,
     string_bound_len: int = STRING_BOUND_LEN,
-    force_hadoop: bool = False,
 ) -> dict:
     """Selective compaction as a manifest commit — the snapshot-safe,
     object-store-safe twin of
@@ -3357,8 +3046,8 @@ def compact_partitions_versioned(
 
     from tagminder_spark.operators.compaction import zorder_value
 
-    fs, base = table_fs(spark, root, force_hadoop)
-    man = read_manifest(spark, root, force_hadoop=force_hadoop)
+    fs, base = table_fs(spark, root)
+    man = read_manifest(spark, root)
     prefixes = tuple(f"{partition_col}={v}/" for v in values)
     replaced = [
         (rel, sz) for rel, sz in man["files"] if rel.startswith(prefixes)
@@ -3407,9 +3096,7 @@ def compact_partitions_versioned(
         .parquet(stage)
     )
     try:
-        new = _move_stage_files(
-            spark, fs, stage, base, force_hadoop=force_hadoop
-        )
+        new = _move_stage_files(spark, fs, stage, base)
     finally:
         fs.delete(stage, ignore_errors=True)
     keep_rels = {rel for rel, _ in keep}
@@ -3431,7 +3118,7 @@ def compact_partitions_versioned(
         spark, root, keep + new,
         parent=man["generation"], stats=stats or None,
         seqs=seqs, deletes=man["deletes"] or None,
-        op="compact", force_hadoop=force_hadoop,
+        op="compact",
     )
     return {
         "generation": gen,
@@ -3440,73 +3127,6 @@ def compact_partitions_versioned(
         "planned_files": n_out,
         "rows": obs.get["rows"],
     }
-
-
-def compact_with_replan(
-    spark: SparkSession,
-    root: str,
-    partition_col: str,
-    *,
-    target_bytes: int = DEFAULT_TARGET_BYTES,
-    min_files: int = 8,
-    small_ratio: float = 0.5,
-    order_col: str = "doc_id",
-    zorder_cols: tuple[str, ...] | None = None,
-    stats_cols: tuple[str, ...] | None = None,
-    max_retries: int = 3,
-    force_hadoop: bool = False,
-) -> dict:
-    """Maintenance that CONVERGES against concurrent appenders (round
-    9, VERDICT r8 #6): plan → :func:`compact_partitions_versioned` →
-    on a lost commit CAS (an appender took the generation first),
-    re-read the fresh manifest, RE-PLAN the candidates, and retry —
-    bounded at ``max_retries`` consecutive losses, then the conflict
-    surfaces.
-
-    Why re-plan instead of blind-retry: a compaction commit REPLACES
-    files, so committing a stale ``keep + new`` list against a newer
-    parent would silently drop the concurrent append's files from the
-    table.  Re-running against the fresh snapshot is always safe —
-    appends only ADD files, and a competing compactor's commit just
-    changes which directories still qualify as candidates.  Iceberg's
-    rewriteDataFiles validates-and-recommits the same way.
-
-    A lost attempt's already-written data files become unreferenced
-    debris (no manifest ever pointed at them);
-    ``expire_snapshots(remove_unreferenced=True)`` reclaims them on the
-    normal cadence — its ``min_unreferenced_age`` guard (default 3
-    days) keeps that reclaim from racing a CONCURRENT appender's
-    stage-move-to-commit window, so the flag is safe to run beside the
-    very appenders this function converges against.
-
-    Returns the compaction report plus ``replan_retries`` (0 = first
-    attempt won); a no-candidates pass returns a zero-work report at
-    the observed generation."""
-    for attempt in range(max_retries + 1):
-        man = read_manifest(spark, root, force_hadoop=force_hadoop)
-        plan = plan_compaction_manifest(
-            man, target_bytes=target_bytes,
-            min_files=min_files, small_ratio=small_ratio,
-        )
-        prefix = f"{partition_col}="
-        values = [
-            d.rsplit(prefix, 1)[1] for d in plan["candidates"] if prefix in d
-        ]
-        if not values:
-            return {"generation": man["generation"], "rewritten": 0,
-                    "files_out": 0, "rows": 0, "replan_retries": attempt}
-        try:
-            report = compact_partitions_versioned(
-                spark, root, partition_col, values,
-                target_bytes=target_bytes, order_col=order_col,
-                zorder_cols=zorder_cols, stats_cols=stats_cols,
-                force_hadoop=force_hadoop,
-            )
-            report["replan_retries"] = attempt
-            return report
-        except FileExistsError:
-            if attempt == max_retries:
-                raise
 
 
 def _key_bound_split(man: dict, key: str) -> tuple[list, list]:
@@ -3635,7 +3255,6 @@ def merge_into_manifest(
     stats_cols: tuple[str, ...] | None = None,
     file_granular: bool = True,
     string_bound_len: int = 64,
-    force_hadoop: bool = False,
 ) -> dict:
     """Snapshot-isolated, file-granular copy-on-write MERGE — the
     manifest-versioned twin of
@@ -3680,12 +3299,11 @@ def merge_into_manifest(
     """
     import uuid
 
-    fs, base = table_fs(spark, root, force_hadoop)
-    man = read_manifest(spark, root, force_hadoop=force_hadoop)
+    fs, base = table_fs(spark, root)
+    man = read_manifest(spark, root)
     if key not in updates.columns:
         raise ValueError(f"updates lack the merge key {key!r}")
-    existing = snapshot_read(spark, root, man["generation"],
-                             force_hadoop=force_hadoop)
+    existing = snapshot_read(spark, root, man["generation"])
     missing = [c for c in existing.columns if c not in updates.columns]
     if missing:
         raise ValueError(f"updates lack table columns: {missing}")
@@ -3722,9 +3340,7 @@ def merge_into_manifest(
             writer = writer.partitionBy(partition_col)
         writer.parquet(stage)
         try:
-            new = _move_stage_files(
-                spark, fs, stage, base, force_hadoop=force_hadoop
-            )
+            new = _move_stage_files(spark, fs, stage, base)
         finally:
             fs.delete(stage, ignore_errors=True)
         # CDC provenance (VERDICT r10 #1): the rewritten data files mix
@@ -3763,7 +3379,7 @@ def merge_into_manifest(
         parent=man["generation"], stats=stats or None,
         seqs=seqs, deletes=man["deletes"] or None,
         changes=changes, change_key=key,
-        op="merge-cow", force_hadoop=force_hadoop,
+        op="merge-cow",
     )
     return {
         "generation": gen,
@@ -3784,7 +3400,6 @@ def merge_on_read(
     partition_col: str | None = None,
     stats_cols: tuple[str, ...] | None = None,
     string_bound_len: int = 64,
-    force_hadoop: bool = False,
 ) -> dict:
     """MERGE as Iceberg's **merge-on-read** (equality deletes) — the
     write-optimized twin of :func:`merge_into_manifest`: the update
@@ -3816,12 +3431,11 @@ def merge_on_read(
     """
     import uuid
 
-    fs, base = table_fs(spark, root, force_hadoop)
-    man = read_manifest(spark, root, force_hadoop=force_hadoop)
+    fs, base = table_fs(spark, root)
+    man = read_manifest(spark, root)
     if key not in updates.columns:
         raise ValueError(f"updates lack the merge key {key!r}")
-    existing = snapshot_read(spark, root, man["generation"],
-                             force_hadoop=force_hadoop)
+    existing = snapshot_read(spark, root, man["generation"])
     missing = [c for c in existing.columns if c not in updates.columns]
     if missing:
         raise ValueError(f"updates lack table columns: {missing}")
@@ -3834,9 +3448,7 @@ def merge_on_read(
             writer = writer.partitionBy(partition_col)
         writer.parquet(stage)
         try:
-            new = _move_stage_files(
-                spark, fs, stage, base, force_hadoop=force_hadoop
-            )
+            new = _move_stage_files(spark, fs, stage, base)
         finally:
             fs.delete(stage, ignore_errors=True)
 
@@ -3875,7 +3487,7 @@ def merge_on_read(
         stats=stats or None,
         seqs={rel: gen for rel, _ in new},
         delete_adds=[(rel, gen, key) for rel, _ in del_entries],
-        op="merge-mor", force_hadoop=force_hadoop,
+        op="merge-mor",
     )
     return {
         "generation": gen,
@@ -3892,8 +3504,6 @@ def delete_where(
     spark: SparkSession,
     root: str,
     where: list[tuple],
-    *,
-    force_hadoop: bool = False,
 ) -> dict:
     """Row-level DELETE by predicate as Iceberg **positional deletes**
     (round 11, VERDICT r10 #8): matching rows are recorded as
@@ -3919,17 +3529,12 @@ def delete_where(
     snapshot."""
     import uuid
 
-    fs, base = table_fs(spark, root, force_hadoop)
-    man = read_manifest(spark, root, force_hadoop=force_hadoop)
+    fs, base = table_fs(spark, root)
+    man = read_manifest(spark, root)
     _validate_where(where)
     gen = man["generation"] + 1
-    pruned = prune_manifest(
-        man, where,
-        list_transforms(spark, root, force_hadoop=force_hadoop),
-    )
-    scan_files = _bloom_prune(
-        spark, root, pruned["files"], where, force_hadoop=force_hadoop
-    )
+    pruned = prune_manifest(man, where, list_transforms(spark, root))
+    scan_files = _bloom_prune(spark, root, pruned["files"], where)
     if not scan_files:
         return {"generation": man["generation"], "rows_deleted": 0,
                 "delete_files": 0, "data_files_rewritten": 0,
@@ -3979,7 +3584,7 @@ def delete_where(
         delete_adds=[
             (rel, gen, _POS_DELETE_KEY) for rel, _ in del_entries
         ],
-        changes=changes, op="delete-pos", force_hadoop=force_hadoop,
+        changes=changes, op="delete-pos",
     )
     return {
         "generation": gen,
@@ -3998,7 +3603,6 @@ def materialize_deletes(
     partition_col: str | None = None,
     stats_cols: tuple[str, ...] | None = None,
     string_bound_len: int = 64,
-    force_hadoop: bool = False,
 ) -> dict:
     """Fold pending equality deletes back into the data files —
     Iceberg's ``rewrite_position_delete_files`` + touched-file rewrite
@@ -4027,8 +3631,8 @@ def materialize_deletes(
     reference them."""
     import uuid
 
-    fs, base = table_fs(spark, root, force_hadoop)
-    man = read_manifest(spark, root, force_hadoop=force_hadoop)
+    fs, base = table_fs(spark, root)
+    man = read_manifest(spark, root)
     deletes = man["deletes"]
     if not deletes:
         return {"generation": man["generation"], "files_rewritten": 0,
@@ -4131,9 +3735,7 @@ def materialize_deletes(
             writer = writer.partitionBy(partition_col)
         writer.parquet(stage)
         try:
-            new = _move_stage_files(
-                spark, fs, stage, base, force_hadoop=force_hadoop
-            )
+            new = _move_stage_files(spark, fs, stage, base)
         finally:
             fs.delete(stage, ignore_errors=True)
 
@@ -4162,7 +3764,7 @@ def materialize_deletes(
         spark, root, carried + new,
         parent=man["generation"], stats=stats or None,
         seqs=keep_seqs, deletes=carried_deletes or None,
-        op="materialize", force_hadoop=force_hadoop,
+        op="materialize",
     )
     return {
         "generation": gen,
@@ -4181,7 +3783,6 @@ def expire_snapshots(
     keep_last: int = 2,
     remove_unreferenced: bool = False,
     min_unreferenced_age: float = 3 * 24 * 3600.0,
-    force_hadoop: bool = False,
 ) -> dict:
     """Reclaim storage: delete data files referenced ONLY by
     generations older than the newest ``keep_last``, then drop those
@@ -4219,43 +3820,42 @@ def expire_snapshots(
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    fs, base = table_fs(spark, root, force_hadoop)
-    gens = list_generations(spark, root, force_hadoop=force_hadoop)
+    fs, base = table_fs(spark, root)
+    gens = list_generations(spark, root)
     retained = set(gens[-keep_last:])
     # tagged generations are pinned regardless of keep_last — a tag is
     # a caller's promise that someone still reads that exact snapshot
     retained |= {
-        g for g in list_tags(spark, root,
-                             force_hadoop=force_hadoop).values()
+        g for g in list_tags(spark, root).values()
         if g in set(gens)
     }
     needed = set()
     for g in retained:
-        needed.update(_chain_gens(spark, root, g, force_hadoop=force_hadoop))
+        needed.update(_chain_gens(spark, root, g))
     live: set[str] = set()
     for g in retained:
-        man = read_manifest(spark, root, g, force_hadoop=force_hadoop)
+        man = read_manifest(spark, root, g)
         live.update(rel for rel, _ in man["files"])
         live.update(rel for rel, _seq, _k in man["deletes"])
         # CDC change files are per-commit provenance: a retained
         # generation's feed must stay replayable
-        raw = _read_raw(spark, root, g, force_hadoop=force_hadoop)
+        raw = _read_raw(spark, root, g)
         live.update(rel for rel, _ in raw.get("changes", []))
         live.update(rel for rel, _ in raw.get("deleted_changes", []))
     # a staged (write-audit-publish) batch is referenced by its staged
     # doc, not by any generation — its files must survive until the
     # batch is published or abandoned, however long the audit takes
-    for sid in list_staged(spark, root, force_hadoop=force_hadoop):
+    for sid in list_staged(spark, root):
         _p, sdoc = _staged_doc(fs, base, sid)
         live.update(rel for rel, _ in sdoc["adds"])
     removed_files: list[str] = []
     for g in gens:
         if g in retained:
             continue
-        man = read_manifest(spark, root, g, force_hadoop=force_hadoop)
+        man = read_manifest(spark, root, g)
         retired = [rel for rel, _ in man["files"]]
         retired += [rel for rel, _seq, _k in man["deletes"]]
-        raw = _read_raw(spark, root, g, force_hadoop=force_hadoop)
+        raw = _read_raw(spark, root, g)
         retired += [rel for rel, _ in raw.get("changes", [])]
         retired += [rel for rel, _ in raw.get("deleted_changes", [])]
         for rel in retired:
@@ -4298,10 +3898,10 @@ def expire_snapshots(
     # immutable files), so retention keeps ONLY the newest index per
     # column and reclaims superseded ones
     newest: dict[str, int] = {}
-    for doc in list_bloom_indexes(spark, root, force_hadoop=force_hadoop):
+    for doc in list_bloom_indexes(spark, root):
         if doc["generation"] > newest.get(doc["col"], -1):
             newest[doc["col"]] = doc["generation"]
-    for doc in list_bloom_indexes(spark, root, force_hadoop=force_hadoop):
+    for doc in list_bloom_indexes(spark, root):
         if doc["generation"] < newest[doc["col"]]:
             fs.delete(fs.join(base, doc["sidecar"]), ignore_errors=True)
             fs.delete(fs.join(
@@ -4314,99 +3914,6 @@ def expire_snapshots(
     }
 
 
-def optimize_table(
-    spark: SparkSession,
-    root: str,
-    partition_col: str,
-    *,
-    target_bytes: int = DEFAULT_TARGET_BYTES,
-    min_files: int = 8,
-    small_ratio: float = 0.5,
-    order_col: str = "doc_id",
-    zorder_cols: tuple[str, ...] | None = None,
-    stats_cols: tuple[str, ...] | None = None,
-    keep_last: int = 2,
-    remove_unreferenced: bool = False,
-    force_hadoop: bool = False,
-) -> dict:
-    """The maintenance pass a scheduler runs on cadence — the four
-    steps every manifest table needs, in dependency order, one call
-    (Iceberg's ``rewrite_data_files`` + ``rewrite_position_delete_files``
-    + ``expireSnapshots`` rolled into the engine's shapes):
-
-    1. :func:`materialize_deletes` — fold pending equality/positional
-       delete files back into data files (file-granular), so reads
-       return to plain scans and compaction sees final rows;
-    2. :func:`compact_with_replan` — bin-pack fragmented partitions
-       (replan-on-lost-CAS, converges beside concurrent appenders);
-    3. **re-index stale Bloom sidecars** (VERDICT r11 #8) — rewrites
-       in steps 1–2 replace files whose bitmaps the index knew, and
-       appends since the index add files it doesn't: both are kept
-       conservatively (correct) but erode skipping, so every indexed
-       column whose newest sidecar predates the current generation is
-       rebuilt at its original ``fpp``;
-    4. :func:`checkpoint_manifest` — collapse the delta chain so
-       reader folds and expiry retention stay bounded;
-    5. :func:`expire_snapshots` — reclaim retired files/manifests past
-       the retention window (tags always pinned; superseded sidecars
-       reclaimed with their generations).
-
-    Each step is itself a snapshot-safe commit; a crash between steps
-    leaves a consistent table that the next run finishes.  Returns the
-    per-step reports under their names."""
-    report: dict = {}
-    report["materialize"] = materialize_deletes(
-        spark, root,
-        partition_col=partition_col, stats_cols=stats_cols,
-        force_hadoop=force_hadoop,
-    )
-    report["compact"] = compact_with_replan(
-        spark, root, partition_col,
-        target_bytes=target_bytes, min_files=min_files,
-        small_ratio=small_ratio, order_col=order_col,
-        zorder_cols=zorder_cols, stats_cols=stats_cols,
-        force_hadoop=force_hadoop,
-    )
-    newest: dict[str, dict] = {}
-    for doc in list_bloom_indexes(spark, root, force_hadoop=force_hadoop):
-        cur = newest.get(doc["col"])
-        if cur is None or doc["generation"] > cur["generation"]:
-            newest[doc["col"]] = doc
-    if newest:
-        cur_gen = read_manifest(
-            spark, root, force_hadoop=force_hadoop
-        )["generation"]
-        reindex: dict = {}
-        for col, doc in sorted(newest.items()):
-            if doc["generation"] >= cur_gen:
-                continue
-            try:
-                # INCREMENTAL (VERDICT r12 #2): carry forward bitmaps
-                # of files the old sidecar already knows; hash only
-                # files added/rewritten since — O(changed) per pass,
-                # not O(table)
-                reindex[col] = build_bloom_index(
-                    spark, root, col, fpp=doc.get("fpp", 0.01),
-                    base_doc=doc, force_hadoop=force_hadoop,
-                )
-            except TypeError as exc:
-                # legacy doc on a non-indexable column type (pre-r12
-                # builds accepted e.g. floats): that index is already
-                # unusable for lookups — record the skip and keep the
-                # maintenance pass going (ADVICE r12)
-                reindex[col] = {"skipped": str(exc)}
-        report["reindex"] = reindex
-    report["checkpoint"] = checkpoint_manifest(
-        spark, root, force_hadoop=force_hadoop
-    )
-    report["expire"] = expire_snapshots(
-        spark, root, keep_last=keep_last,
-        remove_unreferenced=remove_unreferenced,
-        force_hadoop=force_hadoop,
-    )
-    return report
-
-
 # ---------------------------------------------------------------------------
 # Bloom-filter file indexes (round 11): point-lookup skipping on
 # UNCLUSTERED columns — min/max bounds only prune when the layout
@@ -4416,7 +3923,7 @@ def optimize_table(
 # indexed files; the sidecar is a parquet file beside the manifests;
 # lookups load it once per (table, column, generation) driver-side and
 # cache.  Files added AFTER the index was built simply have no entry
-# and are kept (conservative) — re-index on the maintenance cadence.
+# and are kept (conservative) — rebuild the index to cover them.
 
 # Driver-side bitmap cache — keyed per (base, col, generation, rel) so
 # a point lookup only ever caches the bitmaps it actually consulted,
@@ -4556,9 +4063,6 @@ def build_bloom_index(
     *,
     fpp: float = 0.01,
     gen: int | None = None,
-    base_doc: dict | None = None,
-    force_hadoop: bool = False,
-    _pin_mk: tuple | None = None,
 ) -> dict:
     """Build a per-file Bloom index over ``col`` for the (pinned)
     snapshot and commit it as a parquet SIDECAR
@@ -4577,152 +4081,65 @@ def build_bloom_index(
     / ``delete_where`` consult the index automatically after the stats
     prune.  This is the point-lookup path on columns the layout does
     NOT cluster — min/max bounds span everything there, a Bloom filter
-    does not.
-
-    ``base_doc`` (a prior index's bloomdoc) makes the build
-    INCREMENTAL (VERDICT r12 #2): (m, k, fpp) pin from the doc, every
-    bitmap whose rel is still in the manifest carries forward from the
-    old sidecar unchanged (rels are uuid-named and never reused, so
-    same rel ⇒ same immutable bytes), and only files ABSENT from the
-    old sidecar — appends and compaction outputs since — are read and
-    hashed.  Maintenance cost drops from O(table) to O(changed files)
-    per pass; pinning (m, k) keeps partial filters OR-mergeable and
-    the merged sidecar bit-identical to a from-scratch build at the
-    same sizing.  A vanished old sidecar (expired) or a column whose
-    TYPE changed since falls back to a full build; ``_pin_mk`` forces
-    a sizing (tests pin it to prove merged == from-scratch)."""
-    fs, base = table_fs(spark, root, force_hadoop)
-    man = read_manifest(spark, root, gen, force_hadoop=force_hadoop)
+    does not."""
+    fs, base = table_fs(spark, root)
+    man = read_manifest(spark, root, gen)
     gen = man["generation"]
     entries = man["files"]
     prefix = _filepath_prefix(
         spark, fs, base, [rel for rel, _ in entries[:16]]
     )
 
-    carried = None
-    hash_ents = entries
-    n90 = None
-    if base_doc is not None and base_doc.get("col") == col:
-        old_path = fs.join(base, base_doc["sidecar"])
-        if fs.exists(old_path):
-            pm, pk = _bloom_doc_mk(spark, fs, base, base_doc)
-            old = spark.read.parquet(old_path)
-            cur_rels = spark.createDataFrame(
-                [(r,) for r, _ in entries], "rel string"
-            )
-            new_rels = {
-                r["rel"]
-                for r in cur_rels.join(
-                    old.select("rel"), "rel", "left_anti"
-                ).collect()  # O(changed files), never O(table)
-            }
-            hash_ents = [e for e in entries if e[0] in new_rels]
-            carried = old.join(cur_rels, "rel", "left_semi").select(
-                "rel", "bloom", "n", "m", "k"
-            )
-            fpp = base_doc.get("fpp", fpp)
-            _pin_mk = (pm, pk)
+    raw = (
+        spark.read.option("basePath", base)
+        .parquet(*[fs.join(base, rel) for rel, _ in entries])
+    )
+    kind = _bloom_col_kind(raw.schema[col].dataType)
+    df = raw.select(
+        F.col(col).cast("string").alias("__v"),
+        F.col("_metadata.file_path").substr(
+            F.lit(len(prefix) + 1), F.lit(1 << 30)
+        ).alias("__rel"),
+    )
+    # sizing pass: map-side partial counts, tiny counter shuffle
+    counts = df.groupBy("__rel").count()
+    n90 = counts.approxQuantile("count", [0.9], 0.05)[0]
+    m, k = _bloom_params(int(n90), fpp)
 
-    side = None
-    kind = base_doc.get("kind", "") if base_doc else ""
-    if hash_ents:
-        raw = (
-            spark.read.option("basePath", base)
-            .parquet(*[fs.join(base, rel) for rel, _ in hash_ents])
+    def partial(batches):
+        import numpy as np
+        import pandas as pd
+
+        acc: dict[str, "np.ndarray"] = {}
+        for pdf in batches:
+            for rel, grp in pdf.groupby("__rel"):
+                bits = acc.get(rel)
+                if bits is None:
+                    bits = acc[rel] = np.zeros(m // 8, dtype=np.uint8)
+                _bloom_set_bits(bits, grp["__v"].dropna().unique(), m, k)
+        yield pd.DataFrame(
+            [{"rel": r, "bloom": b.tobytes()}
+             for r, b in acc.items()],
+            columns=["rel", "bloom"],
         )
-        kind = _bloom_col_kind(raw.schema[col].dataType)
-        if carried is not None and base_doc.get("kind") not in (None, kind):
-            # column type changed since the old index — its bitmaps
-            # hash a different value domain; rebuild from scratch
-            carried, hash_ents, _pin_mk = None, entries, None
-            raw = (
-                spark.read.option("basePath", base)
-                .parquet(*[fs.join(base, rel) for rel, _ in hash_ents])
-            )
-        df = raw.select(
-            F.col(col).cast("string").alias("__v"),
-            F.col("_metadata.file_path").substr(
-                F.lit(len(prefix) + 1), F.lit(1 << 30)
-            ).alias("__rel"),
+
+    def merge(pdf):
+        import numpy as np
+        import pandas as pd
+
+        agg = np.zeros(m // 8, dtype=np.uint8)
+        for b in pdf["bloom"]:
+            agg |= np.frombuffer(b, dtype=np.uint8)
+        return pd.DataFrame(
+            [{"rel": pdf["rel"].iloc[0], "bloom": agg.tobytes(),
+              "n": 0, "m": m, "k": k}]
         )
-        if _pin_mk is not None and carried is not None:
-            # sizing guard: pinning (m, k) is only honest while the
-            # NEW files' row counts sit near the original sizing
-            # basis — a 10×-denser append under a pinned filter
-            # silently degrades fpp (conservative for correctness,
-            # corrosive for skipping).  One cheap counter pass over
-            # the CHANGED files only; >2× the recorded basis forces
-            # a fresh full build instead.
-            base_n90 = base_doc.get("n90")
-            if base_n90:
-                new_n90 = (
-                    df.groupBy("__rel").count()
-                    .approxQuantile("count", [0.9], 0.05)[0]
-                )
-                if new_n90 and new_n90 > 2 * base_n90:
-                    carried, hash_ents, _pin_mk = None, entries, None
-                    raw = (
-                        spark.read.option("basePath", base).parquet(
-                            *[fs.join(base, rel)
-                              for rel, _ in hash_ents]
-                        )
-                    )
-                    df = raw.select(
-                        F.col(col).cast("string").alias("__v"),
-                        F.col("_metadata.file_path").substr(
-                            F.lit(len(prefix) + 1), F.lit(1 << 30)
-                        ).alias("__rel"),
-                    )
-        if _pin_mk is not None:
-            m, k = _pin_mk
-        else:
-            # sizing pass: map-side partial counts, tiny counter shuffle
-            counts = df.groupBy("__rel").count()
-            n90 = counts.approxQuantile("count", [0.9], 0.05)[0]
-            m, k = _bloom_params(int(n90), fpp)
 
-        def partial(batches):
-            import numpy as np
-            import pandas as pd
-
-            acc: dict[str, "np.ndarray"] = {}
-            for pdf in batches:
-                for rel, grp in pdf.groupby("__rel"):
-                    bits = acc.get(rel)
-                    if bits is None:
-                        bits = acc[rel] = np.zeros(m // 8, dtype=np.uint8)
-                    _bloom_set_bits(
-                        bits, grp["__v"].dropna().unique(), m, k
-                    )
-            yield pd.DataFrame(
-                [{"rel": r, "bloom": b.tobytes()}
-                 for r, b in acc.items()],
-                columns=["rel", "bloom"],
-            )
-
-        def merge(pdf):
-            import numpy as np
-            import pandas as pd
-
-            agg = np.zeros(m // 8, dtype=np.uint8)
-            for b in pdf["bloom"]:
-                agg |= np.frombuffer(b, dtype=np.uint8)
-            return pd.DataFrame(
-                [{"rel": pdf["rel"].iloc[0], "bloom": agg.tobytes(),
-                  "n": 0, "m": m, "k": k}]
-            )
-
-        side = (
-            df.mapInPandas(partial, "rel string, bloom binary")
-            .groupBy("rel")
-            .applyInPandas(
-                merge, "rel string, bloom binary, n long, m int, k int"
-            )
-        )
-    else:
-        m, k = _pin_mk  # incremental, nothing new to hash
-    if carried is not None:
-        side = carried if side is None else side.unionByName(carried)
+    side = (
+        df.mapInPandas(partial, "rel string, bloom binary")
+        .groupBy("rel")
+        .applyInPandas(merge, "rel string, bloom binary, n long, m int, k int")
+    )
     sidecar_rel = f"{MANIFEST_DIR}/bloom_{col}_{gen}.parquet"
     sidecar = fs.join(base, sidecar_rel)
     # range-partitioned + sorted BY REL: a point lookup pushes
@@ -4737,12 +4154,7 @@ def build_bloom_index(
         .write.mode("overwrite").parquet(sidecar)
     )
     doc = {"col": col, "generation": gen, "fpp": fpp,
-           "sidecar": sidecar_rel, "kind": kind, "m": m, "k": k,
-           # the sizing basis — an incremental rebuild carries it so
-           # the >2× density guard measures against the ORIGINAL
-           # basis (m, k) were derived from, not a drifting one
-           "n90": (int(n90) if n90
-                   else (base_doc or {}).get("n90"))}
+           "sidecar": sidecar_rel, "kind": kind, "m": m, "k": k}
     fs.write_new(
         fs.join(_manifest_dir(fs, base), f"bloomdoc_{col}_{gen}.json"),
         json.dumps(doc, separators=(",", ":")).encode(),
@@ -4750,18 +4162,15 @@ def build_bloom_index(
     n_files = spark.read.parquet(sidecar).count()
     return {"col": col, "generation": gen, "files_indexed": n_files,
             "sidecar": sidecar_rel, "m_bits": m, "k_hashes": k,
-            "kind": kind, "files_hashed": len(hash_ents),
-            "files_carried": len(entries) - len(hash_ents)}
+            "kind": kind}
 
 
 def list_bloom_indexes(
     spark: SparkSession | None,
     root: str,
-    *,
-    force_hadoop: bool = False,
 ) -> list[dict]:
     """Every committed Bloom index doc on the table."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     mdir = _manifest_dir(fs, base)
     out = []
     if not fs.exists(mdir):
@@ -4787,8 +4196,7 @@ def _bloom_doc_mk(spark, fs, base, doc: dict) -> tuple[int, int]:
 
 
 def _load_bloom_entries(
-    spark: SparkSession, root: str, doc: dict, rels: list,
-    *, force_hadoop: bool
+    spark: SparkSession, root: str, doc: dict, rels: list
 ) -> dict:
     """Bitmaps for exactly ``rels`` from one index sidecar —
     ``{rel: (bloom bytes, m, k) | None}`` (``None`` = not in the
@@ -4798,7 +4206,7 @@ def _load_bloom_entries(
     IO by the CANDIDATE SET, never the table; hits land in the
     byte-bounded driver cache, negative hits included (VERDICT r11 #1
     — the old path collected every per-file bitmap)."""
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     base_key = (str(base), doc["col"], doc["generation"])
     out: dict = {}
     misses = []
@@ -4895,8 +4303,6 @@ def _bloom_prune(
     root: str,
     entries: list,
     where: list,
-    *,
-    force_hadoop: bool = False,
 ) -> list:
     """Drop entries whose Bloom filters prove every ``=``/``in``
     literal absent for some conjunct.  OR conjuncts, other ops, and
@@ -4911,7 +4317,7 @@ def _bloom_prune(
     into the rel-sorted sidecar, the cache is byte-bounded, and above
     ``_BLOOM_DRIVER_LOAD_MAX`` uncached bytes the membership test runs
     distributed and only dropped rel strings come back."""
-    docs = list_bloom_indexes(spark, root, force_hadoop=force_hadoop)
+    docs = list_bloom_indexes(spark, root)
     if not docs:
         return entries
     by_col: dict[str, dict] = {}
@@ -4935,7 +4341,7 @@ def _bloom_prune(
             tests_by_col.setdefault(col, []).append(vals)
     if not tests_by_col:
         return entries
-    fs, base = table_fs(spark, root, force_hadoop)
+    fs, base = table_fs(spark, root)
     rels = [rel for rel, _ in entries]
     dropped: set = set()
     for col, tests in tests_by_col.items():
@@ -4951,9 +4357,7 @@ def _bloom_prune(
                 spark, fs, base, doc, rels, tests
             )
             continue
-        blooms = _load_bloom_entries(
-            spark, root, doc, rels, force_hadoop=force_hadoop
-        )
+        blooms = _load_bloom_entries(spark, root, doc, rels)
         for rel in rels:
             if rel in dropped:
                 continue

@@ -661,14 +661,24 @@ def mm_real_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the REAL WAV decode path, oracle-gated (round 9, VERDICT r8 #4):
-# stdlib-wave PCM decode + sample-accurate chunk windows, checked as
-# per-chunk int16 SAMPLE SUMS — pure integer arithmetic DuckDB replays
-# over a generated frame series.  A one-frame boundary error in the
-# ms→frame math (floor/ceil) or a byte-order slip changes a sum.
-_MM_WAV_SQL = """
+# the REAL lossless-audio decode paths, oracle-gated (WAV round 9,
+# VERDICT r8 #4; FLAC round 10; AIFF and WavPack round 13, VERDICT r12
+# #4/#5): every codec encodes the SAME int16 signal, a pure integer
+# formula of (doc_id, frame), and ``chunk_audio`` windows it through
+# the codec-agnostic real decode path (``decode_audio`` dispatches on
+# the container magic, never the ms_per_byte fake).  A second Arrow
+# stage folds each chunk's bytes back to an int16 SAMPLE SUM — pure
+# integer arithmetic DuckDB replays over a generated frame series.
+# The codecs are lossless, so a one-frame floor/ceil slip in the
+# ms→frame math, a byte-order slip or any reconstruction error changes
+# a sum.  The three per-doc rates keep the ms↔frame conversion off the
+# trivial 1-frame-per-ms axis.
+def _pcm_chunks_sql(rates: tuple[int, int, int]) -> str:
+    return """
 WITH d AS (
-  SELECT doc_id, 4000 + (doc_id % 3) * 2000 AS rate, 30 + doc_id % 50 AS n
+  SELECT doc_id,
+         CASE (doc_id % 3) WHEN 0 THEN {} WHEN 1 THEN {} ELSE {} END AS rate,
+         30 + doc_id % 50 AS n
   FROM documents
 ), dd AS (
   SELECT doc_id, rate, n, (n * 1000 + rate - 1) // rate AS dur FROM d
@@ -696,353 +706,147 @@ SELECT doc_id AS media_id,
        CAST(COUNT(*) * 2 AS BIGINT) AS n_bytes,
        CAST(SUM((doc_id * 7 + i * 13) % 4096 - 2048) AS BIGINT) AS sample_sum
 FROM fr GROUP BY doc_id, chunk_idx
-"""
+""".format(*rates)
 
 
-@q("mm_real_wav_chunks", _MM_WAV_SQL)
-def mm_real_wav_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WAV decode + sample-accurate chunking, value-checked: each
-    document synthesizes a genuine RIFF/WAVE PCM file (stdlib ``wave``
-    writer; int16 samples are a pure integer formula of (doc_id,
-    frame)), ``chunk_audio`` windows it through the REAL decode path
-    (``decode_wav`` — not the ms_per_byte fake), and a second Arrow
-    stage folds each chunk's bytes back to an int16 sample sum.  DuckDB
-    replays the ceiling-duration window math and the per-frame formula
-    directly, so a one-frame floor/ceil boundary slip or byte-order
-    error fails the gate.  Rate varies 4000/6000/8000 by doc so the
-    ms↔frame conversion is exercised off the trivial 1-frame-per-ms
-    axis."""
-    from collections.abc import Iterator as _It
+def _encode_wav(s, rate: int, did: int) -> bytes:
+    from tagminder_spark.sources.multimodal import encode_wav
 
-    import numpy as np
-    import pandas as pd
-
-    from tagminder_spark.sources.multimodal import (
-        chunk_audio_kernel,
-        encode_wav,
-    )
-
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    )
-
-    def synth(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                did = int(r.media_id)
-                rate = 4000 + (did % 3) * 2000
-                n = 30 + did % 50
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 7 + i * 13) % 4096 - 2048).astype("<i2")
-                rows.append(
-                    {
-                        "media_id": did,
-                        "kind": "audio",
-                        "content": encode_wav(s, rate),
-                        "meta": None,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "content", "meta"]
-            )
-
-    def sums(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            out = pdf.copy()
-            out["n_bytes"] = out["chunk_bytes"].map(len)
-            out["sample_sum"] = out["chunk_bytes"].map(
-                lambda b: int(
-                    np.frombuffer(b, dtype="<i2").astype(np.int64).sum()
-                )
-            )
-            yield out[
-                ["media_id", "chunk_idx", "start_ms", "end_ms",
-                 "n_bytes", "sample_sum"]
-            ]
-
-    # fused synth→decode→chunk→sum (guide §4; see session.fuse_pandas)
-    return spread(d).mapInPandas(
-        fuse_pandas(synth, chunk_audio_kernel(window_ms=8, hop_ms=5), sums),
-        "media_id long, chunk_idx int, start_ms long, end_ms long,"
-        " n_bytes long, sample_sum long",
-    )
+    return encode_wav(s, rate)
 
 
-# the REAL FLAC decode path, oracle-gated (round 10): the WAV gate's
-# integer sample formula, losslessly compressed — the oracle is the
-# SAME window/sum replay, so a single reconstructed sample anywhere in
-# the Rice/LPC/stereo pipeline fails the hash.  Per-doc the encoder
-# pins a different subframe family (fixed/verbatim/LPC/escape) and a
-# small blocksize forces multi-frame streams.
-_MM_FLAC_SQL = """
-WITH d AS (
-  SELECT doc_id, 4000 + (doc_id % 3) * 2000 AS rate, 30 + doc_id % 50 AS n
-  FROM documents
-), dd AS (
-  SELECT doc_id, rate, n, (n * 1000 + rate - 1) // rate AS dur FROM d
-), ch AS (
-  SELECT doc_id, rate, n, dur, s.generate_series AS start_ms
-  FROM dd, generate_series(0, 30, 5) AS s
-  WHERE s.generate_series < dur
-), cb AS (
-  SELECT doc_id, rate, n, start_ms,
-         start_ms // 5 AS chunk_idx,
-         LEAST(start_ms + 8, dur) AS end_ms,
-         (start_ms * rate) // 1000 AS f0,
-         LEAST((LEAST(start_ms + 8, dur) * rate + 999) // 1000, n) AS f1
-  FROM ch
-), fr AS (
-  SELECT cb.doc_id, cb.chunk_idx, cb.start_ms, cb.end_ms,
-         i.generate_series AS i
-  FROM cb, generate_series(0, 79) AS i
-  WHERE i.generate_series >= cb.f0 AND i.generate_series < cb.f1
-)
-SELECT doc_id AS media_id,
-       CAST(chunk_idx AS INT) AS chunk_idx,
-       CAST(MIN(start_ms) AS BIGINT) AS start_ms,
-       CAST(MIN(end_ms) AS BIGINT) AS end_ms,
-       CAST(COUNT(*) * 2 AS BIGINT) AS n_bytes,
-       CAST(SUM((doc_id * 7 + i * 13) % 4096 - 2048) AS BIGINT) AS sample_sum
-FROM fr GROUP BY doc_id, chunk_idx
-"""
-
-
-@q("mm_real_flac_chunks", _MM_FLAC_SQL)
-def mm_real_flac_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL FLAC decode + sample-accurate chunking, value-checked: each
-    document synthesizes the SAME int16 signal as the WAV gate but
-    encodes it as genuine FLAC (``sources/flac.py`` — frames, Rice
-    residuals, CRC-8/16, PCM MD5), varying the subframe family per doc
-    (best-fixed / verbatim / order-2 LPC / escape partitions) with an
-    8-sample-per-ms-scale blocksize so every stream is multi-frame.
-    ``chunk_audio`` windows it through the codec-agnostic REAL path
-    (``decode_audio`` dispatches on the fLaC magic), and the oracle is
-    the identical integer replay as ``mm_real_wav_chunks`` — FLAC is
-    lossless, so ANY reconstruction error (a Rice parameter misread, a
-    predictor off-by-one, a CRC slip, a mid-frame boundary error)
-    changes a sample sum and fails the gate."""
-    from collections.abc import Iterator as _It
-
-    import numpy as np
-    import pandas as pd
-
+def _encode_flac(s, rate: int, did: int) -> bytes:
     from tagminder_spark.sources.flac import encode_flac
-    from tagminder_spark.sources.multimodal import (
-        chunk_audio_kernel,
-    )
 
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    )
-
-    def synth(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        forces = [None, "verbatim", "lpc", "escape"]
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                did = int(r.media_id)
-                rate = 4000 + (did % 3) * 2000
-                n = 30 + did % 50
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 7 + i * 13) % 4096 - 2048).astype("<i2")
-                rows.append(
-                    {
-                        "media_id": did,
-                        "kind": "audio",
-                        "content": encode_flac(
-                            s, rate, blocksize=32,
-                            force=forces[did % 4],
-                        ),
-                        "meta": None,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "content", "meta"]
-            )
-
-    def sums(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            out = pdf.copy()
-            out["n_bytes"] = out["chunk_bytes"].map(len)
-            out["sample_sum"] = out["chunk_bytes"].map(
-                lambda b: int(
-                    np.frombuffer(b, dtype="<i2").astype(np.int64).sum()
-                )
-            )
-            yield out[
-                ["media_id", "chunk_idx", "start_ms", "end_ms",
-                 "n_bytes", "sample_sum"]
-            ]
-
-    # fused synth→decode→chunk→sum (guide §4; see session.fuse_pandas)
-    return spread(d).mapInPandas(
-        fuse_pandas(synth, chunk_audio_kernel(window_ms=8, hop_ms=5), sums),
-        "media_id long, chunk_idx int, start_ms long, end_ms long,"
-        " n_bytes long, sample_sum long",
-    )
+    # small blocksize: every stream is multi-frame
+    force = (None, "verbatim", "lpc", "escape")[did % 4]
+    return encode_flac(s, rate, blocksize=32, force=force)
 
 
-@q("mm_real_aiff_chunks", _MM_WAV_SQL)
-def mm_real_aiff_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL AIFF / AIFF-C decode + sample-accurate chunking,
-    value-checked (round 13, VERDICT r12 #4): each document
-    synthesizes the SAME int16 signal as the WAV gate but encodes it
-    as genuine AIFF — cycling classic big-endian ``AIFF``, AIFF-C
-    ``twos`` (big) and AIFF-C ``sowt`` (little) per doc so BOTH byte
-    orders and both container flavors run through ``chunk_audio``'s
-    codec-agnostic real path (``decode_audio`` dispatches on the FORM
-    magic).  The oracle is the identical integer replay as
-    ``mm_real_wav_chunks`` — AIFF PCM is lossless, so an endianness
-    slip, an SSND offset misread, or a frame-boundary error changes a
-    sample sum and fails the gate.  Reference ingests ``.aiff``
-    (scripts/ingest/tags2db.py:108)."""
-    from collections.abc import Iterator as _It
+def _encode_aiff(s, rate: int, did: int) -> bytes:
+    from tagminder_spark.sources.multimodal import encode_aiff
 
-    import numpy as np
-    import pandas as pd
-
-    from tagminder_spark.sources.multimodal import (
-        chunk_audio_kernel,
-        encode_aiff,
-    )
-
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    )
-    comps = [b"NONE", b"twos", b"sowt"]
-
-    def synth(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                did = int(r.media_id)
-                rate = 4000 + (did % 3) * 2000
-                n = 30 + did % 50
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 7 + i * 13) % 4096 - 2048).astype(np.int16)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "kind": "audio",
-                        "content": encode_aiff(
-                            s, rate, compression=comps[did % 3]
-                        ),
-                        "meta": None,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "content", "meta"]
-            )
-
-    def sums(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            out = pdf.copy()
-            # decode_aiff hands chunk bytes back in the CONTAINER's
-            # byte order: '>i2' for NONE/twos docs, '<i2' for sowt
-            out["n_bytes"] = out["chunk_bytes"].map(len)
-            out["sample_sum"] = [
-                int(np.frombuffer(
-                    b, dtype="<i2" if mid % 3 == 2 else ">i2"
-                ).astype(np.int64).sum())
-                for b, mid in zip(out["chunk_bytes"], out["media_id"])
-            ]
-            yield out[
-                ["media_id", "chunk_idx", "start_ms", "end_ms",
-                 "n_bytes", "sample_sum"]
-            ]
-
-    # fused synth→decode→chunk→sum (guide §4; see session.fuse_pandas)
-    return spread(d).mapInPandas(
-        fuse_pandas(synth, chunk_audio_kernel(window_ms=8, hop_ms=5), sums),
-        "media_id long, chunk_idx int, start_ms long, end_ms long,"
-        " n_bytes long, sample_sum long",
-    )
+    return encode_aiff(s, rate, compression=_AIFF_COMPRESSIONS[did % 3])
 
 
-# same integer replay as _MM_WAV_SQL, but the rate set must come from
-# WavPack's fixed sample-rate table (no 4000): 6000/8000/12000
-_MM_WV_SQL = _MM_WAV_SQL.replace(
-    "4000 + (doc_id % 3) * 2000",
-    "CASE (doc_id % 3) WHEN 0 THEN 6000 WHEN 1 THEN 8000"
-    " ELSE 12000 END",
-)
-
-
-@q("mm_real_wv_chunks", _MM_WV_SQL)
-def mm_real_wv_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WavPack decode + sample-accurate chunking, value-checked
-    (round 13, VERDICT r12 #5): each document synthesizes the SAME
-    int16 signal as the WAV gate but encodes it as a genuine
-    multi-block WavPack stream (``sources/wavpack.py`` — adaptive
-    decorrelation chain incl. the stereo... here mono cross-free
-    path, joint-free mono blocks, the median-driven words entropy
-    coder with zero-run and holding-phase machinery, per-block CRC),
-    with the block size small enough that every stream is
-    multi-block.  ``chunk_audio`` windows it through the
-    codec-agnostic real path (``decode_audio`` dispatches on the
-    wvpk magic), and the oracle is the identical integer replay as
-    ``mm_real_wav_chunks`` — WavPack is lossless, so ANY
-    reconstruction error (a median walk slip, a weight update sign
-    error, a holding-phase desync, a block seam off-by-one) changes
-    a sample sum and fails the gate.  Reference ingests ``.wv``
-    (scripts/ingest/tags2db.py:108)."""
-    from collections.abc import Iterator as _It
-
-    import numpy as np
-    import pandas as pd
-
-    from tagminder_spark.sources.multimodal import (
-        chunk_audio_kernel,
-    )
+def _encode_wv(s, rate: int, did: int) -> bytes:
     from tagminder_spark.sources.wavpack import encode_wavpack
 
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    )
+    # small blocks: every stream is multi-block
+    return encode_wavpack(s, rate, block_samples=32)
 
-    def synth(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                did = int(r.media_id)
-                rate = (6000, 8000, 12000)[did % 3]
-                n = 30 + did % 50
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 7 + i * 13) % 4096 - 2048).astype(np.int16)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "kind": "audio",
-                        "content": encode_wavpack(
-                            s, rate, block_samples=32
-                        ),
-                        "meta": None,
-                    }
+
+#: classic big-endian AIFF, AIFF-C big-endian, AIFF-C little-endian —
+#: decode_aiff hands chunk bytes back in the CONTAINER's byte order
+_AIFF_COMPRESSIONS = (b"NONE", b"twos", b"sowt")
+
+
+def _aiff_sample_dtype(did: int) -> str:
+    return "<i2" if _AIFF_COMPRESSIONS[did % 3] == b"sowt" else ">i2"
+
+
+def _lossless_chunks_gate(encode, rates, sample_dtype, doc: str) -> QueryFn:
+    """One registered gate per codec: ``encode(samples, rate, doc_id)``
+    builds the container, ``rates`` picks the rate by ``doc_id % 3``,
+    and ``sample_dtype(doc_id)`` is the byte order of the decoded chunk
+    bytes."""
+
+    def gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from collections.abc import Iterator as _It
+
+        import numpy as np
+        import pandas as pd
+
+        from tagminder_spark.sources.multimodal import chunk_audio_kernel
+
+        d = load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").alias("media_id")
+        )
+
+        def synth(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
+            for pdf in batches:
+                rows = []
+                for r in pdf.itertuples():
+                    did = int(r.media_id)
+                    n = 30 + did % 50
+                    i = np.arange(n, dtype=np.int64)
+                    s = ((did * 7 + i * 13) % 4096 - 2048).astype("<i2")
+                    rows.append(
+                        {
+                            "media_id": did,
+                            "kind": "audio",
+                            "content": encode(s, rates[did % 3], did),
+                            "meta": None,
+                        }
+                    )
+                yield pd.DataFrame(
+                    rows, columns=["media_id", "kind", "content", "meta"]
                 )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "content", "meta"]
-            )
 
-    def sums(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
-        for pdf in batches:
-            out = pdf.copy()
-            out["n_bytes"] = out["chunk_bytes"].map(len)
-            out["sample_sum"] = out["chunk_bytes"].map(
-                lambda b: int(
-                    np.frombuffer(b, dtype="<i2").astype(np.int64).sum()
-                )
-            )
-            yield out[
-                ["media_id", "chunk_idx", "start_ms", "end_ms",
-                 "n_bytes", "sample_sum"]
-            ]
+        def sums(batches: "_It[pd.DataFrame]") -> "_It[pd.DataFrame]":
+            for pdf in batches:
+                out = pdf.copy()
+                out["n_bytes"] = out["chunk_bytes"].map(len)
+                out["sample_sum"] = [
+                    int(np.frombuffer(b, dtype=sample_dtype(int(mid)))
+                        .astype(np.int64).sum())
+                    for b, mid in zip(out["chunk_bytes"], out["media_id"])
+                ]
+                yield out[
+                    ["media_id", "chunk_idx", "start_ms", "end_ms",
+                     "n_bytes", "sample_sum"]
+                ]
 
-    # fused synth→decode→chunk→sum (guide §4; see session.fuse_pandas)
-    return spread(d).mapInPandas(
-        fuse_pandas(synth, chunk_audio_kernel(window_ms=8, hop_ms=5), sums),
-        "media_id long, chunk_idx int, start_ms long, end_ms long,"
-        " n_bytes long, sample_sum long",
+        # fused synth→decode→chunk→sum (guide §4; session.fuse_pandas)
+        return spread(d).mapInPandas(
+            fuse_pandas(
+                synth, chunk_audio_kernel(window_ms=8, hop_ms=5), sums
+            ),
+            "media_id long, chunk_idx int, start_ms long, end_ms long,"
+            " n_bytes long, sample_sum long",
+        )
+
+    gate.__doc__ = doc
+    return gate
+
+
+def _little_endian(did: int) -> str:
+    return "<i2"
+
+
+for _name, _encode, _rates, _dtype, _doc in (
+    ("mm_real_wav_chunks", _encode_wav, (4000, 6000, 8000), _little_endian,
+     "REAL WAV decode + sample-accurate chunking, value-checked: a "
+     "genuine RIFF/WAVE PCM file per document (stdlib ``wave`` writer) "
+     "through ``decode_wav``."),
+    ("mm_real_flac_chunks", _encode_flac, (4000, 6000, 8000),
+     _little_endian,
+     "REAL FLAC decode + sample-accurate chunking, value-checked: "
+     "genuine multi-frame FLAC (``sources/flac.py`` — frames, Rice "
+     "residuals, CRC-8/16, PCM MD5) with the subframe family "
+     "(best-fixed / verbatim / order-2 LPC / escape partitions) cycled "
+     "per doc, so a Rice parameter misread or a predictor off-by-one "
+     "fails the gate."),
+    ("mm_real_aiff_chunks", _encode_aiff, (4000, 6000, 8000),
+     _aiff_sample_dtype,
+     "REAL AIFF / AIFF-C decode + sample-accurate chunking, "
+     "value-checked: classic big-endian ``AIFF``, AIFF-C ``twos`` (big) "
+     "and ``sowt`` (little) cycled per doc, so both byte orders and "
+     "both container flavors run, and an endianness slip or an SSND "
+     "offset misread fails the gate.  Reference ingests ``.aiff`` "
+     "(scripts/ingest/tags2db.py:108)."),
+    # WavPack's fixed sample-rate table has no 4000
+    ("mm_real_wv_chunks", _encode_wv, (6000, 8000, 12000), _little_endian,
+     "REAL WavPack decode + sample-accurate chunking, value-checked: a "
+     "genuine multi-block WavPack stream (``sources/wavpack.py`` — "
+     "adaptive decorrelation, the median-driven words entropy coder "
+     "with zero-run and holding-phase machinery, per-block CRC), so a "
+     "median walk slip, a weight update sign error or a block seam "
+     "off-by-one fails the gate.  Reference ingests ``.wv`` "
+     "(scripts/ingest/tags2db.py:108)."),
+):
+    q(_name, _pcm_chunks_sql(_rates))(
+        _lossless_chunks_gate(_encode, _rates, _dtype, _doc)
     )
 
 

@@ -203,7 +203,9 @@ def test_write_curated_shards_one_file_per_directory(spark, tmp_path):
     assert back.select("doc_id").distinct().count() == docs.count()
 
 
-def test_list_data_files_local_matches_hadoop(spark, tmp_path):
+def test_list_data_files_local_matches_hadoop(
+    spark, tmp_path, hadoop_backend
+):
     """The scandir fast path and the Hadoop FS path must agree
     (path, size) for (path, size) on the same directory tree."""
     from tagminder_spark.operators.compaction import list_data_files
@@ -214,7 +216,8 @@ def test_list_data_files_local_matches_hadoop(spark, tmp_path):
     _fragment(spark, docs, frag)
 
     fast = list_data_files(spark, frag)
-    slow = list_data_files(spark, frag, force_hadoop=True)
+    with hadoop_backend():
+        slow = list_data_files(spark, frag)
 
     def norm(items):
         return sorted(

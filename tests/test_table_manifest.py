@@ -357,16 +357,16 @@ def test_expire_keeps_chain_needed_manifests(spark, tmp_path):
 
 
 def test_schema_evolution_on_append(spark, tmp_path):
-    """A later batch adds a column: the manifest just lists files;
-    snapshot_read_merged unions the schemas (old files read NULL for
-    the new column), while the pinned pre-evolution generation still
-    reads its original schema."""
+    """A later batch adds a column: the manifest just lists files, so
+    the append commits unchanged; a read under parquet schema merging
+    unions the schemas (old files read NULL for the new column), while
+    the pinned pre-evolution generation still reads its original
+    schema."""
     from pyspark.sql import functions as F
 
     from tagminder_spark.operators.table_manifest import (
         append_files,
         snapshot_read,
-        snapshot_read_merged,
     )
     from tagminder_spark.session import load_table
 
@@ -378,13 +378,17 @@ def test_schema_evolution_on_append(spark, tmp_path):
     )
     root = str(tmp_path / "t")
     append_files(spark, a, root, partition_col="lang")
-    append_files(spark, b, root, partition_col="lang")
-
-    merged = snapshot_read_merged(spark, root)
-    assert set(merged.columns) == {"doc_id", "lang", "n_chars"}
-    assert merged.count() == docs.count()
-    # old files surface NULL for the evolved column; new files real values
-    nulls = merged.filter(F.col("n_chars").isNull()).count()
+    rep = append_files(spark, b, root, partition_col="lang")
+    assert rep["generation"] == 2
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        merged = snapshot_read(spark, root)
+        assert set(merged.columns) == {"doc_id", "lang", "n_chars"}
+        assert merged.count() == docs.count()
+        # old files surface NULL for the evolved column
+        nulls = merged.filter(F.col("n_chars").isNull()).count()
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
     assert nulls == a.count()
     # pinned gen-1 keeps the original two-column schema
     g1 = snapshot_read(spark, root, 1)
@@ -475,7 +479,7 @@ def test_plan_compaction_manifest_matches_directory_planner(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_compact_partitions_hadoop_branch(spark, tmp_path):
+def test_compact_partitions_hadoop_branch(spark, tmp_path, hadoop_backend):
     from tagminder_spark.operators.compaction import (
         compact_partitions,
         plan_compaction,
@@ -485,10 +489,10 @@ def test_compact_partitions_hadoop_branch(spark, tmp_path):
     docs = _fragmented_table(spark, root)
     plan = plan_compaction(spark, root, target_bytes=4 << 20, min_files=8)
     values = [d.rsplit("lang=", 1)[1] for d in plan["candidates"]]
-    report = compact_partitions(
-        spark, root, "lang", values,
-        target_bytes=4 << 20, force_hadoop=True,
-    )
+    with hadoop_backend():
+        report = compact_partitions(
+            spark, root, "lang", values, target_bytes=4 << 20
+        )
     assert report["rewritten_dirs"] and report["rows"] == docs.filter(
         "lang = 'en'"
     ).count()
@@ -499,7 +503,9 @@ def test_compact_partitions_hadoop_branch(spark, tmp_path):
     assert leftovers == []
 
 
-def test_recover_interrupted_swaps_hadoop_branch(spark, tmp_path):
+def test_recover_interrupted_swaps_hadoop_branch(
+    spark, tmp_path, hadoop_backend
+):
     import shutil
 
     from tagminder_spark.operators.compaction import (
@@ -519,9 +525,8 @@ def test_recover_interrupted_swaps_hadoop_branch(spark, tmp_path):
     shutil.copytree(root / f"lang={survivor}",
                     root / f".lang={survivor}.__old__")
 
-    restored = recover_interrupted_swaps(
-        str(root), spark, force_hadoop=True
-    )
+    with hadoop_backend():
+        restored = recover_interrupted_swaps(str(root), spark)
     assert restored == [str(root / f"lang={victim}")]
     assert (root / f"lang={victim}").exists()
     assert not (root / f".lang={victim}.__old__").exists()
@@ -675,7 +680,9 @@ def test_streaming_swap_mode_recovers_parked_partition(spark, tmp_path):
     assert got == want
 
 
-def test_manifest_versioned_compaction_hadoop_branch(spark, tmp_path):
+def test_manifest_versioned_compaction_hadoop_branch(
+    spark, tmp_path, hadoop_backend
+):
     """The object-store-shaped path end-to-end through the Hadoop FS
     API: init → versioned compact → expire, byte-identical rows."""
     from tagminder_spark.operators.table_manifest import (
@@ -687,14 +694,14 @@ def test_manifest_versioned_compaction_hadoop_branch(spark, tmp_path):
 
     root = str(tmp_path / "t")
     docs = _fragmented_table(spark, root)
-    init_manifest(spark, root, force_hadoop=True)
-    report = compact_partitions_versioned(
-        spark, root, "lang", ["en"],
-        target_bytes=4 << 20, force_hadoop=True,
-    )
-    assert report["generation"] == 2
-    expire_snapshots(spark, root, keep_last=1, force_hadoop=True)
-    assert _rows(snapshot_read(spark, root, force_hadoop=True)) == _rows(docs)
+    with hadoop_backend():
+        init_manifest(spark, root)
+        report = compact_partitions_versioned(
+            spark, root, "lang", ["en"], target_bytes=4 << 20
+        )
+        assert report["generation"] == 2
+        expire_snapshots(spark, root, keep_last=1)
+        assert _rows(snapshot_read(spark, root)) == _rows(docs)
     assert _rows(spark.read.parquet(root)) == _rows(docs)
 
 
@@ -1012,9 +1019,11 @@ def test_merge_into_manifest_snapshot_isolated(spark, tmp_path):
 
 def test_compact_with_replan_converges_after_lost_cas(spark, tmp_path):
     """Deterministic forced race: an appender steals the generation the
-    compactor is about to commit.  compact_with_replan must re-read,
-    re-plan, retry, and land WITHOUT losing the interloper's files —
-    final table = original ∪ appended batch, history linear."""
+    compactor is about to commit.  compact_partitions_versioned must
+    raise FileExistsError instead of committing its stale file list,
+    the interloper's files stay in the table, and the caller's re-plan
+    against the fresh snapshot lands — final table = original ∪
+    appended batch, history linear."""
     from pyspark.sql import functions as F
 
     import tagminder_spark.operators.table_manifest as tm
@@ -1042,15 +1051,20 @@ def test_compact_with_replan_converges_after_lost_cas(spark, tmp_path):
 
     tm.commit_manifest, orig = racing_commit, tm.commit_manifest
     try:
-        report = tm.compact_with_replan(
-            spark, root, "lang", target_bytes=4 << 20, min_files=8
-        )
+        with pytest.raises(FileExistsError):
+            tm.compact_partitions_versioned(
+                spark, root, "lang", ["en"], target_bytes=4 << 20
+            )
     finally:
         tm.commit_manifest = orig
-    assert report["replan_retries"] == 1  # lost once, re-planned, won
     # nothing lost: original rows ∪ appended batch, appended files kept
-    want = _rows(docs) + _rows(extra)
-    assert _rows(tm.snapshot_read(spark, root)) == sorted(want)
+    want = sorted(_rows(docs) + _rows(extra))
+    assert _rows(tm.snapshot_read(spark, root)) == want
+    report = tm.compact_partitions_versioned(
+        spark, root, "lang", ["en"], target_bytes=4 << 20
+    )
+    assert report["rewritten"] > 0
+    assert _rows(tm.snapshot_read(spark, root)) == want
     # history is linear: every retained generation has parent = gen - 1
     hist = tm.table_history(spark, root)
     gens = [h["generation"] for h in hist]
@@ -1061,9 +1075,10 @@ def test_compact_with_replan_converges_after_lost_cas(spark, tmp_path):
 
 def test_appender_and_compactor_threads_both_commit(spark, tmp_path):
     """Genuine two-thread race (no monkeypatching): one thread appends
-    batches while another runs compact_with_replan in a loop.  Both
-    must finish without raising; every appended row must be present in
-    the final snapshot; history stays linear."""
+    batches while another compacts in a loop, re-planning after a lost
+    commit CAS.  The appender must finish without raising; every
+    appended row must be present in the final snapshot; history stays
+    linear."""
     import threading
 
     from pyspark.sql import functions as F
@@ -1094,10 +1109,17 @@ def test_appender_and_compactor_threads_both_commit(spark, tmp_path):
     def compactor():
         try:
             for _ in range(3):
-                tm.compact_with_replan(
-                    spark, root, "lang",
-                    target_bytes=4 << 20, min_files=4, max_retries=5,
+                plan = tm.plan_compaction_manifest(
+                    tm.read_manifest(spark, root),
+                    target_bytes=4 << 20, min_files=4,
                 )
+                values = [d.split("lang=", 1)[1] for d in plan["candidates"]]
+                try:
+                    tm.compact_partitions_versioned(
+                        spark, root, "lang", values, target_bytes=4 << 20
+                    )
+                except FileExistsError:
+                    continue  # an append won the generation: re-plan
         except Exception as e:
             errors.append(e)
 
@@ -1274,7 +1296,9 @@ def test_expiry_reclaims_only_old_debris(spark, tmp_path):
     assert not os.path.exists(young)
 
 
-def test_hadoop_write_new_readback_gated_on_scheme(spark, tmp_path):
+def test_hadoop_write_new_readback_gated_on_scheme(
+    spark, tmp_path, hadoop_backend
+):
     """On true-CAS schemes (hdfs) the post-rename readback is skipped —
     the rename itself proved the commit; on weak schemes (file/s3a) it
     still runs and a foreign readback raises FileExistsError.  The
@@ -1285,7 +1309,8 @@ def test_hadoop_write_new_readback_gated_on_scheme(spark, tmp_path):
 
     root = str(tmp_path / "t")
     (tmp_path / "t").mkdir()
-    fs, base = table_fs(spark, root, force_hadoop=True)
+    with hadoop_backend():
+        fs, base = table_fs(spark, root)
     assert isinstance(fs, _HadoopFS)
 
     # weak scheme (file): readback runs — simulate foreign bytes
@@ -1324,8 +1349,8 @@ def test_hadoop_write_new_readback_gated_on_scheme(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# round 10: string bounds, disjunction pruning, merged-read skipping,
-# fold cache, Hadoop-stream footer stats
+# round 10: string bounds, disjunction pruning, fold cache,
+# Hadoop-stream footer stats
 
 
 def test_truncated_string_bound_helpers():
@@ -1488,53 +1513,6 @@ def test_string_bounds_prune_and_stay_exact(spark, tmp_path):
     assert got2 == docs.filter(F.col("path") >= "/music/zh/").count()
 
 
-def test_snapshot_read_merged_where_prunes(spark, tmp_path):
-    """Schema-evolved tables get data skipping too (VERDICT r9 #7):
-    fewer files planned, value-exact, and a predicate on the evolved
-    column that prunes away every carrying file returns empty."""
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.table_manifest import (
-        append_files,
-        init_manifest,
-        snapshot_read_merged,
-    )
-    from tagminder_spark.session import load_table
-
-    root = str(tmp_path / "t")
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "lang")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    old.repartitionByRange(4, "doc_id").write.mode("append").partitionBy(
-        "lang"
-    ).parquet(root)
-    init_manifest(spark, root, stats_cols=("doc_id",))
-    new = (
-        docs.filter(F.col("doc_id") % 2 == 1)
-        .withColumn("score", (F.col("doc_id") % 7).cast("double"))
-        .repartitionByRange(4, "doc_id")
-    )
-    append_files(spark, new, root, stats_cols=("doc_id", "score"))
-
-    ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
-    odd = next(i for i in ids if i % 2 == 1)  # lives in an evolved file
-    df = snapshot_read_merged(spark, root, where=[("doc_id", "=", odd)])
-    assert len(df.inputFiles()) < 8  # pruned
-    got = [(r["doc_id"], r["score"]) for r in df.collect()]
-    assert got == [(odd, float(odd % 7))]
-
-    # even id: kept files may all predate the score column (schema
-    # narrows to the files read — documented mergeSchema caveat)
-    even = next(i for i in ids if i % 2 == 0)
-    rows = snapshot_read_merged(
-        spark, root, where=[("doc_id", "=", even)]
-    ).collect()
-    assert [r["doc_id"] for r in rows] == [even]
-
-    # predicate impossible per stats on the evolved column → empty
-    out = snapshot_read_merged(spark, root, where=[("score", ">", 100.0)])
-    assert out.collect() == []
-
-
 def test_fold_cache_repeat_reads_hit(spark, tmp_path):
     """VERDICT r9 #5: repeat read_manifest of an immutable generation is
     served from the fold cache; a table recreated at the same path is
@@ -1572,8 +1550,10 @@ def test_fold_cache_repeat_reads_hit(spark, tmp_path):
     assert tm._FOLD_CACHE_STATS == {"hits": 0, "misses": 0}
 
 
-def test_remote_scheme_stats_via_hadoop_footer(spark, tmp_path):
-    """VERDICT r9 #4 done-criterion: with force_hadoop=True the footer
+def test_remote_scheme_stats_via_hadoop_footer(
+    spark, tmp_path, hadoop_backend
+):
+    """VERDICT r9 #4 done-criterion: through the Hadoop backend the footer
     stats are collected through the Hadoop FS stream (positioned tail
     read) and the pruned plan is identical to the local-path run."""
     import shutil
@@ -1591,22 +1571,18 @@ def test_remote_scheme_stats_via_hadoop_footer(spark, tmp_path):
     shutil.copytree(root_a, root_b)
 
     init_manifest(spark, root_a, stats_cols=("doc_id", "lang"))
-    init_manifest(
-        spark, root_b, stats_cols=("doc_id", "lang"), force_hadoop=True
-    )
-    sa = read_manifest(spark, root_a)["stats"]
-    sb = read_manifest(spark, root_b, force_hadoop=True)["stats"]
-    assert sb and sa == sb  # byte-identical copies → identical stats
-
     ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
     where = [("doc_id", "<=", ids[len(ids) // 10])]
+    sa = read_manifest(spark, root_a)["stats"]
     pa = snapshot_scan_plan(spark, root_a, where=where)
-    pb = snapshot_scan_plan(spark, root_b, where=where, force_hadoop=True)
+    with hadoop_backend():
+        init_manifest(spark, root_b, stats_cols=("doc_id", "lang"))
+        sb = read_manifest(spark, root_b)["stats"]
+        pb = snapshot_scan_plan(spark, root_b, where=where)
+        got = snapshot_read(spark, root_b, where=where).count()
+    assert sb and sa == sb  # byte-identical copies → identical stats
     assert pb["skipped"] > 0
     assert [f[0] for f in pa["files"]] == [f[0] for f in pb["files"]]
-    got = snapshot_read(
-        spark, root_b, where=where, force_hadoop=True
-    ).count()
     assert got == len([i for i in ids if i <= ids[len(ids) // 10]])
 
 
@@ -2467,8 +2443,7 @@ def test_table_changes_cdc_feed(spark, tmp_path):
 def test_snapshot_tags_pin_retention(spark, tmp_path):
     """Tags are immutable named refs: a tagged generation (and its
     files) survives expire_snapshots regardless of keep_last, reads
-    back exact via resolve_tag, re-tagging raises, and dropping the
-    tag releases the pin."""
+    back exact via resolve_tag, and re-tagging raises."""
     import os
 
     import pytest as _pytest
@@ -2476,7 +2451,6 @@ def test_snapshot_tags_pin_retention(spark, tmp_path):
 
     from tagminder_spark.operators.table_manifest import (
         create_tag,
-        drop_tag,
         expire_snapshots,
         list_tags,
         merge_on_read,
@@ -2510,12 +2484,8 @@ def test_snapshot_tags_pin_retention(spark, tmp_path):
         fromlist=["read_manifest"],
     ).read_manifest(spark, root, 1)["files"]:
         assert os.path.exists(os.path.join(root, rel)), rel
-
-    drop_tag(spark, root, "baseline")
-    rep2 = expire_snapshots(spark, root, keep_last=1)
-    assert 1 not in rep2["retained_generations"]
     with _pytest.raises(ValueError):
-        resolve_tag(spark, root, "baseline")
+        resolve_tag(spark, root, "no-such-tag")
 
 
 def test_write_audit_publish_lifecycle(spark, tmp_path):
@@ -2574,50 +2544,6 @@ def test_write_audit_publish_lifecycle(spark, tmp_path):
         assert not os.path.exists(os.path.join(root, rel))
 
 
-def test_metadata_tables(spark, tmp_path):
-    """The table's bookkeeping as DataFrames: files (with seq,
-    partition values, bounds), history (with ops), partitions,
-    pending deletes, tags, staged batches — all driver-side."""
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.table_manifest import (
-        create_tag,
-        merge_on_read,
-        metadata_table,
-        read_manifest,
-        stage_append,
-    )
-
-    root = str(tmp_path / "t")
-    docs = _clustered_docs(spark, root)
-    create_tag(spark, root, "t0")
-    merge_on_read(
-        spark, root,
-        docs.limit(10).withColumn("n_chars", F.lit(-1).cast("long")),
-        "doc_id",
-    )
-    sid = stage_append(spark, docs.limit(3), root)
-
-    man = read_manifest(spark, root)
-    files = metadata_table(spark, root, "files")
-    assert files.count() == len(man["files"])
-    assert files.filter(F.col("seq") == 2).count() >= 1  # MoR adds
-    r0 = files.filter(F.col("bounds").isNotNull()).first()
-    assert "doc_id" in r0["bounds"]
-
-    hist = metadata_table(spark, root, "history")
-    ops = [r["op"] for r in hist.orderBy("generation").collect()]
-    assert ops == ["init", "merge-mor"]
-
-    assert metadata_table(spark, root, "partitions").count() >= 1
-    dels = metadata_table(spark, root, "deletes")
-    assert dels.count() == 1 and dels.first()["key"] == "doc_id"
-    tags = metadata_table(spark, root, "tags")
-    assert tags.collect()[0].asDict() == {"tag": "t0", "generation": 1}
-    st = metadata_table(spark, root, "staged")
-    assert st.first()["staged_id"] == sid and st.first()["files"] >= 1
-
-
 def test_merge_on_read_lost_cas_surfaces(spark, tmp_path):
     """A MoR merge whose commit CAS loses (a concurrent writer took
     the generation) SURFACES the conflict instead of retrying blindly
@@ -2661,50 +2587,6 @@ def test_merge_on_read_lost_cas_surfaces(spark, tmp_path):
     for row in docs.collect():
         want = -1 if row["doc_id"] in upd_ids else row["n_chars"]
         assert got[row["doc_id"]] == want
-
-
-def test_sync_changes_incremental_consumer(spark, tmp_path):
-    """The CDC consumer harness: first sync sees the changes since the
-    oldest retained generation, ack advances the cursor, a re-read
-    BEFORE ack replays the same feed (at-least-once), and after ack
-    only new commits appear."""
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.table_manifest import (
-        append_files,
-        merge_on_read,
-        sync_changes,
-    )
-
-    root = str(tmp_path / "t")
-    cursor = str(tmp_path / "consumer" / "cursor.json")
-    docs = _clustered_docs(spark, root)  # gen 1
-
-    appended = docs.limit(5).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"), "lang", "n_chars"
-    )
-    append_files(spark, appended, root, partition_col=None)  # gen 2
-
-    feed, to_gen, ack = sync_changes(spark, root, cursor)
-    assert to_gen == 2
-    assert feed.count() == 5  # gen-2 inserts only (gen 1 is the base)
-    # crash before ack: replay is identical
-    feed2, to2, _ = sync_changes(spark, root, cursor)
-    assert to2 == 2 and feed2.count() == 5
-    ack()
-
-    # nothing new -> empty feed, no-op ack
-    feed3, to3, ack3 = sync_changes(spark, root, cursor)
-    assert to3 is None and feed3.count() == 0
-    ack3()
-
-    upd = docs.limit(7).withColumn("n_chars", F.lit(-1).cast("long"))
-    merge_on_read(spark, root, upd, "doc_id")  # gen 3
-    feed4, to4, ack4 = sync_changes(spark, root, cursor)
-    assert to4 == 3
-    assert feed4.filter(F.col("_change_type") == "insert").count() == 7
-    assert feed4.filter(F.col("_change_type") == "delete").count() == 7
-    ack4()
 
 
 def test_hidden_partitioning_prunes_through_transform(spark, tmp_path):
@@ -2939,26 +2821,21 @@ def test_merge_cow_always_persists_updates(spark, tmp_path, monkeypatch):
 
 
 def test_sync_changes_across_cow_commit(spark, tmp_path):
-    """The incremental consumer stays alive across a copy-on-write
-    MERGE: applying the feed (delete keys, then insert rows, per
-    commit order) to its local replica reproduces the table exactly."""
+    """A consumer syncing a replica from ``table_changes`` stays alive
+    across a copy-on-write MERGE: applying the feed (delete keys, then
+    insert rows, per commit order) reproduces the table exactly."""
     from pyspark.sql import functions as F
 
     from tagminder_spark.operators.table_manifest import (
         append_files,
         merge_into_manifest,
         snapshot_read,
-        sync_changes,
+        table_changes,
     )
 
     root = str(tmp_path / "t")
-    cursor = str(tmp_path / "cursor.json")
     docs = _clustered_docs(spark, root)  # gen 1
-
-    # consumer bootstraps from the init commit's retained feed window:
-    # first sync sees nothing (from_gen == oldest == current)
-    feed, to_gen, ack = sync_changes(spark, root, cursor)
-    assert to_gen is None and feed.count() == 0
+    assert table_changes(spark, root, 1).count() == 0
 
     append_files(
         spark,
@@ -2972,8 +2849,8 @@ def test_sync_changes_across_cow_commit(spark, tmp_path):
     rep = merge_into_manifest(spark, root, upd, "doc_id")  # gen 3 (CoW)
     assert rep["change_files"] >= 1
 
-    feed, to_gen, ack = sync_changes(spark, root, cursor)
-    assert to_gen == 3
+    feed = table_changes(spark, root, 1)
+    assert {r["_commit_gen"] for r in feed.collect()} == {2, 3}
     # replica = gen-1 table, then replay the feed per commit
     replica = {
         r["doc_id"]: (r["lang"], r["n_chars"])
@@ -2989,15 +2866,13 @@ def test_sync_changes_across_cow_commit(spark, tmp_path):
             replica.pop(r["doc_id"], None)
         else:
             replica[r["doc_id"]] = (r["lang"], r["n_chars"])
-    ack()
     table_now = {
         r["doc_id"]: (r["lang"], r["n_chars"])
         for r in snapshot_read(spark, root).collect()
     }
     assert replica == table_now
-    # cursor advanced: next sync is empty
-    feed2, to2, _ = sync_changes(spark, root, cursor)
-    assert to2 is None and feed2.count() == 0
+    # a feed starting at the current generation is empty
+    assert table_changes(spark, root, 3).count() == 0
 
 
 def test_expire_reclaims_cow_change_files(spark, tmp_path):
@@ -3878,64 +3753,6 @@ def test_table_changes_partitioned_append_same_basenames(spark, tmp_path):
     assert got == want
 
 
-def test_optimize_table_full_maintenance_pass(spark, tmp_path):
-    """One scheduler call: pending deletes materialized, fragmented
-    partitions bin-packed, chain checkpointed, old snapshots expired —
-    the table reads back exactly and the directory is reclaimed."""
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.table_manifest import (
-        delete_where,
-        merge_on_read,
-        optimize_table,
-        read_manifest,
-        snapshot_read,
-    )
-    from tagminder_spark.session import load_table
-
-    root = str(tmp_path / "t")
-    docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", "lang", F.col("n_chars").cast("long").alias("n_chars")
-    )
-    # fragmented: en in 16 shards
-    en = docs.filter(F.col("lang") == "en").repartition(16)
-    rest = docs.filter(F.col("lang") != "en").coalesce(1)
-    en.write.mode("append").partitionBy("lang").parquet(root)
-    rest.write.mode("append").partitionBy("lang").parquet(root)
-    from tagminder_spark.operators.table_manifest import init_manifest
-
-    init_manifest(spark, root, stats_cols=("doc_id",))
-    upd = docs.limit(25).withColumn("n_chars", F.lit(-1).cast("long"))
-    merge_on_read(spark, root, upd, "doc_id", partition_col="lang")
-    bounds = docs.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    ).first()
-    hi_cut = bounds["hi"] - (bounds["hi"] - bounds["lo"]) // 10
-    delete_where(spark, root, [("doc_id", ">", hi_cut)])
-
-    rep = optimize_table(
-        spark, root, "lang", target_bytes=4 << 20, min_files=4,
-        stats_cols=("doc_id",), keep_last=1,
-        remove_unreferenced=True,
-    )
-    assert rep["materialize"]["delete_files_dropped"] >= 2
-    assert rep["compact"]["rewritten"] > 0
-    assert rep["expire"]["removed_generations"]
-    man = read_manifest(spark, root)
-    assert not man["deletes"]
-
-    got = {
-        (r["doc_id"], r["n_chars"])
-        for r in snapshot_read(spark, root).collect()
-    }
-    upd_ids = {r["doc_id"] for r in upd.collect()}
-    want = {
-        (r["doc_id"], -1 if r["doc_id"] in upd_ids else r["n_chars"])
-        for r in docs.filter(F.col("doc_id") <= hi_cut).collect()
-    }
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # round 11: Bloom-filter file indexes
 
@@ -4294,7 +4111,7 @@ def test_cdc_attribution_broadcast_join_above_threshold(
     def feed_rows():
         return sorted(
             (r["doc_id"], r["_change_type"], r["_commit_gen"])
-            for r in table_changes(spark, root, 1, 2).collect()
+            for r in table_changes(spark, root, 1).collect()
         )
 
     want = feed_rows()  # literal-map path (small window)
@@ -4553,65 +4370,6 @@ def test_materialize_per_file_seq_applicability(spark, tmp_path):
     assert after == before
 
 
-def test_optimize_table_rebuilds_stale_bloom_indexes(spark, tmp_path):
-    """Compaction rewrites files the Bloom index knew and appends add
-    files it doesn't — both kept conservatively, eroding skipping.
-    optimize_table re-indexes stale sidecars so post-maintenance
-    lookups skip again (VERDICT r11 #8)."""
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.table_manifest import (
-        append_files,
-        build_bloom_index,
-        init_manifest,
-        list_bloom_indexes,
-        optimize_table,
-        read_manifest,
-        snapshot_read,
-        snapshot_scan_plan,
-    )
-    from tagminder_spark.session import load_table
-
-    root = str(tmp_path / "t")
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "lang")
-    # fragmented round-robin layout: stats can't prune, compaction will
-    docs.repartition(12).write.mode("append").partitionBy(
-        "lang"
-    ).parquet(root)
-    init_manifest(spark, root)
-    rep0 = build_bloom_index(spark, root, "doc_id")
-    append_files(
-        spark,
-        docs.limit(9).select(
-            (F.col("doc_id") + 10_000_000).alias("doc_id"), "lang"
-        ),
-        root, partition_col="lang",
-    )
-    rep = optimize_table(spark, root, "lang", min_files=2)
-    assert rep["compact"]["rewritten"] > 0
-    assert "doc_id" in rep["reindex"]
-    assert rep["reindex"]["doc_id"]["generation"] > rep0["generation"]
-    # exactly one live index doc per column after expiry
-    docs_live = list_bloom_indexes(spark, root)
-    assert [d["col"] for d in docs_live] == ["doc_id"]
-    cur_gen = read_manifest(spark, root)["generation"]
-    assert docs_live[0]["generation"] >= rep["reindex"]["doc_id"]["generation"]
-
-    # post-maintenance lookups skip again — incl. post-index appends
-    newid = 10_000_000 + docs.first()["doc_id"]
-    plan = snapshot_scan_plan(spark, root, where=[("doc_id", "=", newid)])
-    assert plan["bloom_skipped"] > 0
-    assert snapshot_read(
-        spark, root, where=[("doc_id", "=", newid)]
-    ).count() == 1
-
-    # a second optimize with nothing stale skips the rebuild
-    rep2 = optimize_table(spark, root, "lang", min_files=2)
-    assert rep2.get("reindex", {}) == {} or all(
-        r["generation"] >= cur_gen for r in rep2["reindex"].values()
-    )
-
-
 def test_delete_anti_join_broadcast_size_gated(spark, tmp_path, monkeypatch):
     """VERDICT r12 #1: the delete-application anti-join is size-gated.
     With Catalyst's own auto-broadcast disabled, a small delete set
@@ -4750,139 +4508,6 @@ def test_pos_rels_for_group_escaped_rels_conservative(tmp_path):
         tm._pos_delete_file_bounds = orig
 
 
-def test_bloom_incremental_reindex_o_changed_and_equal(spark, tmp_path):
-    """VERDICT r12 #2: re-index with ``base_doc`` hashes ONLY files
-    absent from the old sidecar (O(changed), counted in the report)
-    and carries every still-live bitmap forward; the merged sidecar is
-    BIT-IDENTICAL to a from-scratch build at the same pinned (m, k),
-    so it prunes identically by construction."""
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.table_manifest import (
-        append_files,
-        build_bloom_index,
-        init_manifest,
-        list_bloom_indexes,
-        read_manifest,
-        table_fs,
-    )
-    from tagminder_spark.session import load_table
-
-    root = str(tmp_path / "t")
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "lang")
-    docs.repartition(6).write.mode("append").parquet(root)
-    init_manifest(spark, root)
-    rep0 = build_bloom_index(spark, root, "doc_id")
-    assert rep0["files_hashed"] == rep0["files_indexed"]
-    n_before = len(read_manifest(spark, root)["files"])
-
-    extra = docs.limit(50).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"), "lang"
-    ).repartition(2)
-    append_files(spark, extra, root, partition_col=None)
-    n_new = len(read_manifest(spark, root)["files"]) - n_before
-
-    doc0 = [d for d in list_bloom_indexes(spark, root)
-            if d["generation"] == rep0["generation"]][0]
-    rep1 = build_bloom_index(spark, root, "doc_id", base_doc=doc0)
-    assert rep1["files_hashed"] == n_new          # O(changed files)
-    assert rep1["files_carried"] == n_before
-    assert rep1["files_indexed"] == n_before + n_new
-    assert (rep1["m_bits"], rep1["k_hashes"]) == (
-        rep0["m_bits"], rep0["k_hashes"]
-    )  # sizing pinned from the doc
-
-    # from-scratch at the SAME sizing => identical sidecar bytes
-    # (on a copy of the table: the doc CAS blocks a same-gen rebuild)
-    import shutil as _shutil
-
-    root2 = str(tmp_path / "t2")
-    _shutil.copytree(root, root2)
-    fs2, base2 = table_fs(spark, root2, False)
-    fs2.delete(fs2.join(base2, rep1["sidecar"]), ignore_errors=True)
-    fs2.delete(
-        fs2.join(
-            base2, f"_manifest/bloomdoc_doc_id_{rep1['generation']}.json"
-        ),
-        ignore_errors=True,
-    )
-    rep2 = build_bloom_index(
-        spark, root2, "doc_id",
-        _pin_mk=(rep0["m_bits"], rep0["k_hashes"]),
-    )
-    assert rep2["files_hashed"] == n_before + n_new
-    fs, base = table_fs(spark, root, False)
-
-    def side_map(b, rep):
-        rows = spark.read.parquet(
-            "/".join([b, rep["sidecar"]])
-        ).collect()
-        return {r["rel"]: bytes(r["bloom"]) for r in rows}
-
-    assert side_map(root, rep1) == side_map(root2, rep2)
-
-
-def test_optimize_reindex_incremental_and_legacy_skip(spark, tmp_path):
-    """optimize_table's reindex step is incremental — on a pure-append
-    maintenance pass it hashes only the files added since the index —
-    and a LEGACY bloomdoc naming a non-indexable (float) column is
-    skipped with a recorded reason instead of failing the whole
-    maintenance pass (ADVICE r12)."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.table_manifest import (
-        _manifest_dir,
-        append_files,
-        build_bloom_index,
-        init_manifest,
-        optimize_table,
-        read_manifest,
-        snapshot_scan_plan,
-        table_fs,
-    )
-    from tagminder_spark.session import load_table
-
-    root = str(tmp_path / "t")
-    docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", "lang", (F.col("n_chars") * 1.5).alias("score")
-    )
-    docs.repartition(6).write.mode("append").parquet(root)
-    init_manifest(spark, root)
-    build_bloom_index(spark, root, "doc_id")
-    # forge a legacy float-column bloomdoc (pre-r12 builds allowed it)
-    fs, base = table_fs(spark, root, False)
-    gen0 = read_manifest(spark, root)["generation"]
-    fs.write_new(
-        fs.join(_manifest_dir(fs, base), f"bloomdoc_score_{gen0}.json"),
-        _json.dumps({
-            "col": "score", "generation": gen0, "fpp": 0.01,
-            "sidecar": "_manifest/bloom_score_missing.parquet",
-        }).encode(),
-    )
-
-    n_before = len(read_manifest(spark, root)["files"])
-    extra = docs.limit(20).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"), "lang", "score"
-    ).repartition(2)
-    append_files(spark, extra, root, partition_col=None)
-    n_new = len(read_manifest(spark, root)["files"]) - n_before
-
-    # min_files high enough that compaction is a no-op => pure append
-    rep = optimize_table(spark, root, None, min_files=999)
-    assert rep["reindex"]["doc_id"]["files_hashed"] == n_new
-    assert rep["reindex"]["doc_id"]["files_carried"] == n_before
-    assert "skipped" in rep["reindex"]["score"]
-
-    # post-maintenance lookups still skip on the re-indexed column
-    probe = docs.first()["doc_id"] + 10_000_000
-    plan = snapshot_scan_plan(
-        spark, root, where=[("doc_id", "=", probe)]
-    )
-    assert len(plan["files"]) < n_before + n_new
-
-
 def test_eq_delete_files_pruned_per_group(spark, tmp_path, monkeypatch):
     """Equality-delete pruning (round 13): a merge's key-column delete
     file anti-joins only scan groups whose committed doc_id stats can
@@ -4966,41 +4591,3 @@ def test_eq_rels_for_group_conservative_paths(tmp_path):
     finally:
         tm._delete_file_col_bounds = orig
 
-
-def test_bloom_incremental_resizes_on_density_jump(spark, tmp_path):
-    """Sizing guard: an append whose per-file row counts exceed 2x
-    the index's recorded sizing basis forces a FULL fresh-sized
-    rebuild instead of carrying the now-undersized (m, k) — pinned
-    filters on 10x-denser files would silently degrade fpp."""
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.table_manifest import (
-        append_files,
-        build_bloom_index,
-        init_manifest,
-        list_bloom_indexes,
-        read_manifest,
-    )
-    from tagminder_spark.session import load_table
-
-    root = str(tmp_path / "t")
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "lang")
-    docs.repartition(6).write.mode("append").parquet(root)  # ~83/file
-    init_manifest(spark, root)
-    rep0 = build_bloom_index(spark, root, "doc_id")
-    doc0 = [d for d in list_bloom_indexes(spark, root)
-            if d["generation"] == rep0["generation"]][0]
-    assert doc0.get("n90")
-
-    # 2 files x ~2500 rows >> 2x the ~83-row basis
-    big = spark.range(5000).select(
-        (F.col("id") + 20_000_000).alias("doc_id"),
-        F.lit("en").alias("lang"),
-    ).repartition(2)
-    append_files(spark, big, root, partition_col=None)
-    n_all = len(read_manifest(spark, root)["files"])
-
-    rep1 = build_bloom_index(spark, root, "doc_id", base_doc=doc0)
-    assert rep1["files_hashed"] == n_all          # full rebuild
-    assert rep1["files_carried"] == 0
-    assert rep1["m_bits"] > rep0["m_bits"]        # fresh, larger sizing

@@ -80,7 +80,7 @@ def main() -> None:
         t0 = time.perf_counter()
         rep = tm.delete_where(spark, root, [("doc_id", ">=", N_ROWS // 4)])
         t_del = time.perf_counter() - t0
-        fs, base = tm.table_fs(spark, root, False)
+        fs, base = tm.table_fs(spark, root)
         man = tm.read_manifest(spark, root)
         del_bytes = sum(
             fs.file_size(fs.join(base, rel))

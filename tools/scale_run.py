@@ -18,7 +18,6 @@ import json
 import math
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -35,25 +34,11 @@ SF01 = "/root/testdata/sf0.1"
 SF1 = str(Path(__file__).resolve().parent.parent / ".scaledata" / "sf1")
 
 
-def _run_once(spark, qs, name: str, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    t = time.perf_counter() - t0
-    for _rid, rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items():
-        rdd.unpersist()
-    # Deliberately NOT spark.catalog.clearCache(): the sweep releases the
-    # BLOCKS (the leak that made queries 4x slower), while the re-used
-    # CacheManager relations carry their already-compiled stages — with
-    # clearCache every pass re-runs whole-stage codegen for the cache
-    # build (measured: d_minhash_lsh warm 1.6 s -> 2.4 s). Entries
-    # without blocks are metadata-cheap.
-    return t
-
-
 def main() -> None:
     passes = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     queries = sys.argv[2:] or QUERIES
     import __spark_entry__ as entry
+    from bench import _run_once
     from tagminder_spark.session import get_spark
 
     spark = get_spark("scale_run")

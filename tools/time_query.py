@@ -3,16 +3,16 @@
 Usage: python tools/time_query.py <passes> <query> [query ...]
        (sf dir from $SPARK_GRAFT_SF_DIR, default sf0.1)
 
-Same timed region as bench.py (_run_once: build + noop sink, persistent-RDD
-sweep after, min over passes) so numbers are directly comparable, but without
-the other 50+ queries' noise and with per-pass output.
+Same timed region as bench.py (it calls bench._run_once: build + noop
+sink, persistent-RDD sweep after; min over passes) so numbers are directly
+comparable, but without the other 50+ queries' noise and with per-pass
+output.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -20,6 +20,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def main() -> None:
     import __spark_entry__ as entry
+    from bench import _run_once
     from tagminder_spark.session import get_spark
 
     passes = int(sys.argv[1])
@@ -33,15 +34,8 @@ def main() -> None:
     for p in range(passes):
         for name in names:
             spark.sparkContext.setJobDescription(name)
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            t = time.perf_counter() - t0
+            t = _run_once(spark, qs, name, sf_dir)
             spark.sparkContext.setJobDescription(None)
-            for _rid, rdd in dict(
-                spark.sparkContext._jsc.getPersistentRDDs()
-            ).items():
-                rdd.unpersist()
             best[name] = min(best.get(name, 1e9), t)
             print(f"# pass{p} {name}: {t:.3f}s", file=sys.stderr)
     for name in names:
