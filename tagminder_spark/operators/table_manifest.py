@@ -44,6 +44,7 @@ no analogue; cited for contrast: its whole store is
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import posixpath
@@ -51,6 +52,7 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tagminder_spark.operators.compaction import (
     DEFAULT_TARGET_BYTES,
@@ -1385,6 +1387,10 @@ def read_manifest(
     ``"delete_removes"``; both come back resolved (``{}``/``[]`` when
     the table has no MoR state).
 
+    The table's read schema folds too: ``"schema"`` is the newest
+    chain doc's recorded value (Spark JSON, or ``None`` — unknown, so
+    readers infer it; see :func:`commit_manifest`).
+
     Resolution is CACHED (``_FOLD_CACHE``): a committed chain is
     immutable, so repeat reads of the same (table, generation) return
     the folded result without re-parsing — at 800k files that turns the
@@ -1451,6 +1457,9 @@ def read_manifest(
     out = {
         "generation": gen,
         "parent": chain[0].get("parent"),
+        "schema": next(
+            (man["schema"] for man in chain if "schema" in man), None
+        ),
         "files": sorted([p, sz] for p, sz in files.items()),
         "stats": {rel: stats[rel] for rel in sorted(stats) if rel in files},
         "seqs": {rel: seqs[rel] for rel in sorted(seqs) if rel in files},
@@ -1473,6 +1482,7 @@ def _copy_man(man: dict) -> dict:
     out = {
         "generation": man["generation"],
         "parent": man["parent"],
+        "schema": man["schema"],
         "files": list(man["files"]),
         "stats": dict(man["stats"]),
         "seqs": dict(man.get("seqs", {})),
@@ -1500,6 +1510,87 @@ def _chain_gens(
         out.append(cur)
 
 
+#: default ``schema`` of :func:`commit_manifest` / :func:`commit_delta`:
+#: the commit records its parent's schema
+_PARENT_SCHEMA = object()
+
+#: the schema of every positional delete file (:func:`delete_where`)
+_POS_DELETE_SCHEMA = T.StructType([
+    T.StructField("file", T.StringType()),
+    T.StructField("pos", T.LongType()),
+])
+
+
+def _nullable(dt):
+    """A data type's JSON form with every level nullable — what a
+    parquet read reports whatever nullability the writer had."""
+    if not isinstance(dt, dict):
+        return dt
+    kind = dt.get("type")
+    if kind == "struct":
+        return {**dt, "fields": [
+            {**f, "nullable": True, "type": _nullable(f["type"])}
+            for f in dt["fields"]
+        ]}
+    if kind == "array":
+        return {**dt, "containsNull": True,
+                "elementType": _nullable(dt["elementType"])}
+    if kind == "map":
+        return {**dt, "valueContainsNull": True,
+                "keyType": _nullable(dt["keyType"]),
+                "valueType": _nullable(dt["valueType"])}
+    return dt
+
+
+def _schema_json(schema: T.StructType) -> str:
+    """The form a manifest records a schema in (compact Spark JSON,
+    nullable throughout)."""
+    return json.dumps(_nullable(schema.jsonValue()), separators=(",", ":"))
+
+
+def _written_schema(df: DataFrame, partition_col: str | None) -> str:
+    """The schema a parquet read of ``df``'s written files reports:
+    its columns with the ``partitionBy`` column moved last."""
+    fields = [f for f in df.schema.fields if f.name != partition_col]
+    fields += [f for f in df.schema.fields if f.name == partition_col]
+    return _schema_json(T.StructType(fields))
+
+
+def _writes_schema(
+    df: DataFrame, partition_col: str | None, schema: str | None
+) -> bool:
+    """Whether ``df`` written with ``partitionBy(partition_col)`` adds
+    files that read back with exactly the recorded ``schema`` — the
+    condition for a commit to keep recording it."""
+    return schema is not None and _written_schema(df, partition_col) == schema
+
+
+@functools.lru_cache(maxsize=64)
+def _struct(schema: str) -> T.StructType:
+    return T.StructType.fromJson(json.loads(schema))
+
+
+def _data_reader(spark: SparkSession, schema: str | None):
+    """``spark.read`` for a table's data files: with the recorded schema
+    Spark plans the scan without inferring it (a footer-reading job);
+    with none, or under ``spark.sql.parquet.mergeSchema`` (which must
+    union whatever the files hold), Spark infers it as before."""
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    if schema is None or merge.lower() == "true":
+        return spark.read
+    return spark.read.schema(_struct(schema))
+
+
+def _key_reader(spark: SparkSession, keycol: str, schema: str | None):
+    """``spark.read`` for equality-delete files, which hold only the
+    table's key column: read with its recorded type, or inferred when
+    the table records no schema.  (Positional delete files are read
+    with the constant :data:`_POS_DELETE_SCHEMA`.)"""
+    if schema is None:
+        return spark.read
+    return spark.read.schema(T.StructType([_struct(schema)[keycol]]))
+
+
 def commit_manifest(
     spark: SparkSession | None,
     root: str,
@@ -1513,6 +1604,7 @@ def commit_manifest(
     change_key: str | None = None,
     deleted_changes: list[tuple[str, int]] | None = None,
     op: str | None = None,
+    schema=_PARENT_SCHEMA,
 ) -> int:
     """Commit ``files`` (relative-path, size) as the next generation.
 
@@ -1538,11 +1630,29 @@ def commit_manifest(
     survivors.  Change files are commit PROVENANCE, not table state:
     they never fold into the file list and are reclaimed with their
     generation's manifest.
+
+    ``schema`` is the table's read schema as Spark JSON (Delta Lake's
+    ``metaData.schemaString``): readers hand it to the parquet scan
+    instead of inferring it, which costs a footer-reading Spark job per
+    read.  ``None`` records "unknown" — readers infer, exactly as for a
+    table that never recorded one.  By default the commit records its
+    parent's schema (``None`` for the first generation).  The recording
+    rule writers follow: :func:`init_manifest` infers the schema once,
+    and a commit that adds files keeps the parent's schema only when
+    the new files read back with exactly that schema
+    (:func:`_writes_schema`) — otherwise it records ``None``, so a table
+    whose schema evolves reads the way it did before schemas were
+    recorded.  Readers also infer while
+    ``spark.sql.parquet.mergeSchema`` is on.
     """
     fs, base = table_fs(spark, root)
     if parent is None:
         gens = list_generations(spark, root)
         parent = gens[-1] if gens else 0
+    if schema is _PARENT_SCHEMA:
+        schema = (
+            read_manifest(spark, root, parent)["schema"] if parent else None
+        )
     gen = parent + 1
     mdir = _manifest_dir(fs, base)
     fs.mkdirs(mdir)
@@ -1552,6 +1662,7 @@ def commit_manifest(
         "generation": gen,
         "parent": parent,
         "ts": round(time.time(), 3),
+        "schema": schema,
         "files": sorted([p, int(sz)] for p, sz in files),
     }
     if op:
@@ -1601,6 +1712,7 @@ def commit_delta(
     changes: list[tuple[str, int]] | None = None,
     change_key: str | None = None,
     op: str | None = None,
+    schema=_PARENT_SCHEMA,
 ) -> int:
     """Commit a DELTA generation: only the added (rel, size) entries
     and removed rel paths, plus the parent pointer — O(|change|) bytes
@@ -1611,7 +1723,9 @@ def commit_delta(
     delta's merge-on-read changes (:func:`merge_on_read` /
     :func:`materialize_deletes`) — also O(|change|).
     ``changes``/``change_key`` attach CDC provenance exactly as in
-    :func:`commit_manifest`."""
+    :func:`commit_manifest`, and ``schema`` follows its rule — by
+    default the delta writes no schema and the fold carries the
+    parent's."""
     fs, base = table_fs(spark, root)
     if parent is None:
         gens = list_generations(spark, root)
@@ -1628,6 +1742,8 @@ def commit_delta(
         "adds": sorted([p, int(sz)] for p, sz in adds),
         "removes": sorted(removes or []),
     }
+    if schema is not _PARENT_SCHEMA:
+        doc["schema"] = schema
     if op:
         doc["op"] = op
     names = {p for p, _ in adds}
@@ -1678,7 +1794,7 @@ def checkpoint_manifest(
         [(p, sz) for p, sz in man["files"]],
         parent=gens[-1], stats=man["stats"],
         seqs=man["seqs"] or None, deletes=man["deletes"] or None,
-        op="checkpoint",
+        op="checkpoint", schema=man["schema"],
     )
 
 
@@ -1694,7 +1810,9 @@ def init_manifest(
     (the listing would see multiple versions' files).  ``stats_cols``
     runs one footer pass over the listing and commits per-file min/max
     bounds for those columns (:func:`collect_file_stats`) so the very
-    first snapshot is already skippable."""
+    first snapshot is already skippable.  The table's read schema is
+    inferred here, once (without schema merging, as a plain read infers
+    it), and recorded for every later read (:func:`commit_manifest`)."""
     if list_generations(spark, root):
         raise ValueError(f"{root!r} is already manifest-versioned")
     fs, base = table_fs(spark, root)
@@ -1708,7 +1826,17 @@ def init_manifest(
                            string_bound_len=string_bound_len)
         if stats_cols else None
     )
-    return commit_manifest(spark, root, rel, parent=0, stats=stats, op="init")
+    schema = (
+        _schema_json(
+            spark.read.option("basePath", base)
+            .option("mergeSchema", "false")
+            .parquet(*[fs.join(base, r) for r, _ in rel])
+            .schema
+        )
+        if rel else None
+    )
+    return commit_manifest(spark, root, rel, parent=0, stats=stats,
+                           op="init", schema=schema)
 
 
 def _partition_spec(rel: str) -> tuple:
@@ -1756,7 +1884,7 @@ _FILEPATH_PREFIX_CACHE: dict = {}
 
 
 def _filepath_prefix(
-    spark: SparkSession, fs, base: str, rels
+    spark: SparkSession, fs, base: str, rels, schema: str | None = None
 ) -> str:
     """The URI prefix Spark's ``_metadata.file_path`` puts before a
     file's table-relative path — probed with a tiny scan of a known
@@ -1764,7 +1892,8 @@ def _filepath_prefix(
     identity must key on the REL PATH, not the basename: a
     dynamic-partition write reuses the same part file name across
     partition directories (one task, one job UUID, many ``lang=…``
-    dirs), so basenames are NOT table-unique."""
+    dirs), so basenames are NOT table-unique.  ``schema`` is the
+    table's recorded schema, if any (:func:`_data_reader`)."""
     p = _FILEPATH_PREFIX_CACHE.get(base)
     if p is not None:
         return p
@@ -1773,7 +1902,7 @@ def _filepath_prefix(
     uri = rel = None
     for rel in rels:
         row = (
-            spark.read.parquet(fs.join(base, rel))
+            _data_reader(spark, schema).parquet(fs.join(base, rel))
             .select(F.col("_metadata.file_path").alias("p"))
             .first()
         )
@@ -2044,21 +2173,27 @@ def _read_entries_with_deletes(
 
     ``with_positions=True`` keeps the physical-identity helper columns
     (:data:`_POS_FILE_COL`, :data:`_POS_IDX_COL`) in the output — what
-    :func:`delete_where` uses to turn a predicate into positions."""
+    :func:`delete_where` uses to turn a predicate into positions.
+
+    Every scan is handed its schema when the manifest records one
+    (data files: :func:`_data_reader`; equality-delete files:
+    :func:`_key_reader`) and positional delete files always are
+    (:data:`_POS_DELETE_SCHEMA`), so planning launches no Spark job."""
     if not entries:
         raise ValueError("no data files to plan")
     deletes = man.get("deletes") or []
+    schema = man.get("schema")
     groups = _delete_mask_groups(entries, man.get("seqs") or {}, deletes)
     has_pos = any(k == _POS_DELETE_KEY for _r, _s, k in deletes)
     prefix = (
         _filepath_prefix(
-            spark, fs, base, [rel for rel, _ in entries[:16]]
+            spark, fs, base, [rel for rel, _ in entries[:16]], schema
         )
         if (with_positions or has_pos) else None
     )
 
     def _plain(ents: list) -> DataFrame:
-        df = spark.read.option("basePath", base).parquet(
+        df = _data_reader(spark, schema).option("basePath", base).parquet(
             *[fs.join(base, rel) for rel, _ in ents]
         )
         return _with_positions(df, prefix) if with_positions else df
@@ -2085,7 +2220,7 @@ def _read_entries_with_deletes(
             ]
             total = (None if any(s is None for s in sizes)
                      else sum(sizes))
-            pdf = spark.read.parquet(
+            pdf = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
                 *[fs.join(base, r) for r in pos_rels]
             )
             df_g = df_g.join(
@@ -2112,7 +2247,7 @@ def _read_entries_with_deletes(
             ]
             total = (None if any(s is None for s in sizes)
                      else sum(sizes))
-            kdf = spark.read.parquet(
+            kdf = _key_reader(spark, keycol, schema).parquet(
                 *[fs.join(base, r) for r in krels]
             ).select(keycol)
             df_g = df_g.join(
@@ -2304,7 +2439,11 @@ def append_files(
     re-raised.  Maintenance (``compact_partitions_versioned``) does
     NOT retry — it REPLACES files, so a lost CAS there means the table
     changed under it: it raises ``FileExistsError`` and the caller must
-    re-plan against the fresh snapshot."""
+    re-plan against the fresh snapshot.
+
+    The delta keeps the table's recorded schema only when the batch
+    writes exactly that schema; otherwise (a new table, an evolved
+    batch) it records none (:func:`commit_manifest`)."""
     import uuid
 
     fs, base = table_fs(spark, root)
@@ -2334,15 +2473,18 @@ def append_files(
         # attempt because a concurrent MoR merge can introduce deletes
         # between attempts; the manifest fold is driver-side and cached.
         seqs = None
+        same_schema = False
         if parent:
             man_cur = read_manifest(spark, root, parent)
             if man_cur["deletes"]:
                 seqs = {rel: parent + 1 for rel, _ in new}
+            same_schema = _writes_schema(df, partition_col, man_cur["schema"])
         try:
             gen = commit_delta(
                 spark, root, new,
                 parent=parent, stats=stats, seqs=seqs,
                 op="append",
+                schema=_PARENT_SCHEMA if same_schema else None,
             )
             break
         except FileExistsError:
@@ -2455,7 +2597,8 @@ def stage_append(
     )
     sid = uuid.uuid4().hex[:12]
     doc: dict = {"staged": sid,
-                 "adds": sorted([p, int(sz)] for p, sz in new)}
+                 "adds": sorted([p, int(sz)] for p, sz in new),
+                 "schema": _written_schema(df, partition_col)}
     if stats:
         doc["stats"] = stats
     fs.write_new(
@@ -2512,7 +2655,8 @@ def publish_staged(
     """PUBLISH step: one delta commit makes the staged batch visible
     atomically (append semantics — retried through lost CAS like
     :func:`append_files`, sequence-stamped when deletes are pending);
-    the staged doc is then removed."""
+    the staged doc is then removed.  The table's recorded schema is
+    kept only when the batch wrote exactly it, as in :func:`append_files`."""
     fs, base = table_fs(spark, root)
     path, doc = _staged_doc(fs, base, staged_id)
     adds = [(rel, sz) for rel, sz in doc["adds"]]
@@ -2521,14 +2665,18 @@ def publish_staged(
         gens = list_generations(spark, root)
         parent = gens[-1] if gens else 0
         seqs = None
+        same_schema = False
         if parent:
             man_cur = read_manifest(spark, root, parent)
             if man_cur["deletes"]:
                 seqs = {rel: parent + 1 for rel, _ in adds}
+            same_schema = (man_cur["schema"] is not None
+                           and doc.get("schema") == man_cur["schema"])
         try:
             gen = commit_delta(
                 spark, root, adds, parent=parent, stats=stats,
                 seqs=seqs, op="append",
+                schema=_PARENT_SCHEMA if same_schema else None,
             )
             break
         except FileExistsError:
@@ -2972,7 +3120,7 @@ def rollback(
         stats=man["stats"],
         seqs=man["seqs"] or None, deletes=man["deletes"] or None,
         changes=changes, deleted_changes=deleted,
-        op="rollback",
+        op="rollback", schema=man["schema"],
     )
 
 
@@ -3119,6 +3267,9 @@ def compact_partitions_versioned(
         parent=man["generation"], stats=stats or None,
         seqs=seqs, deletes=man["deletes"] or None,
         op="compact",
+        schema=(man["schema"]
+                if _writes_schema(shaped, partition_col, man["schema"])
+                else None),
     )
     return {
         "generation": gen,
@@ -3380,6 +3531,9 @@ def merge_into_manifest(
         seqs=seqs, deletes=man["deletes"] or None,
         changes=changes, change_key=key,
         op="merge-cow",
+        schema=(man["schema"]
+                if _writes_schema(merged, partition_col, man["schema"])
+                else None),
     )
     return {
         "generation": gen,
@@ -3482,12 +3636,14 @@ def merge_on_read(
         )
     finally:
         updates.unpersist()
+    same_schema = _writes_schema(updates, partition_col, man["schema"])
     commit_delta(
         spark, root, new, parent=man["generation"],
         stats=stats or None,
         seqs={rel: gen for rel, _ in new},
         delete_adds=[(rel, gen, key) for rel, _ in del_entries],
         op="merge-mor",
+        schema=_PARENT_SCHEMA if same_schema else None,
     )
     return {
         "generation": gen,
@@ -3529,6 +3685,8 @@ def delete_where(
     snapshot."""
     import uuid
 
+    from pyspark.sql import Observation
+
     fs, base = table_fs(spark, root)
     man = read_manifest(spark, root)
     _validate_where(where)
@@ -3544,23 +3702,28 @@ def delete_where(
     )
     matched = df.filter(_where_to_column(where)).persist()
     try:
-        n = matched.count()
-        if n == 0:
-            return {"generation": man["generation"], "rows_deleted": 0,
-                    "delete_files": 0, "data_files_rewritten": 0,
-                    "files_scanned": len(scan_files)}
+        # the match count rides on the delete-file write (no separate
+        # count job); a zero-match write's stage dir is discarded
+        obs = Observation("delete_where_rows")
         dstage = fs.join(base, f".__pos_del_stage_{uuid.uuid4().hex[:8]}__")
         (
             matched.select(
                 F.col(_POS_FILE_COL).alias("file"),
                 F.col(_POS_IDX_COL).cast("long").alias("pos"),
             )
+            .observe(obs, F.count(F.lit(1)).alias("rows"))
             # natural part files, NOT coalesce(1): a quality-filter
             # delete matching billions of rows must not serialize every
             # (file, pos) pair through one writer task — commit_delta
             # already takes a LIST of delete entries (VERDICT r11 #2)
             .write.mode("overwrite").parquet(dstage)
         )
+        n = obs.get["rows"]
+        if n == 0:
+            fs.delete(dstage, ignore_errors=True)
+            return {"generation": man["generation"], "rows_deleted": 0,
+                    "delete_files": 0, "data_files_rewritten": 0,
+                    "files_scanned": len(scan_files)}
         del_entries: list[tuple[str, int]] = []
         try:
             ddir = fs.join(base, "_deletes")
@@ -3664,7 +3827,7 @@ def materialize_deletes(
         # seq applicability rewrote files named only by already-applied
         # deletes whenever ANY newer positional delete existed)
         pairs = (
-            spark.read.parquet(
+            spark.read.schema(_POS_DELETE_SCHEMA).parquet(
                 *[fs.join(base, d[0]) for d in pos_deletes]
             )
             .select("file", F.input_file_name().alias("_src"))
@@ -3717,7 +3880,7 @@ def materialize_deletes(
         ]
         if not subset:
             continue
-        kdf = spark.read.parquet(
+        kdf = _key_reader(spark, keycol, man["schema"]).parquet(
             *[fs.join(base, d[0]) for d in deletes if d[2] == keycol]
         ).select(keycol).distinct()
         sub_man = {"files": subset, "stats": man["stats"]}
@@ -3765,6 +3928,10 @@ def materialize_deletes(
         parent=man["generation"], stats=stats or None,
         seqs=keep_seqs, deletes=carried_deletes or None,
         op="materialize",
+        schema=(man["schema"]
+                if not touched
+                or _writes_schema(tdf, partition_col, man["schema"])
+                else None),
     )
     return {
         "generation": gen,
@@ -4087,11 +4254,11 @@ def build_bloom_index(
     gen = man["generation"]
     entries = man["files"]
     prefix = _filepath_prefix(
-        spark, fs, base, [rel for rel, _ in entries[:16]]
+        spark, fs, base, [rel for rel, _ in entries[:16]], man["schema"]
     )
 
     raw = (
-        spark.read.option("basePath", base)
+        _data_reader(spark, man["schema"]).option("basePath", base)
         .parquet(*[fs.join(base, rel) for rel, _ in entries])
     )
     kind = _bloom_col_kind(raw.schema[col].dataType)

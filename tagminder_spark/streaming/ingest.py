@@ -14,9 +14,14 @@ watermarks bound state so late data is handled without unbounded memory.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+logger = logging.getLogger(__name__)
+
 
 def _events_schema(path_dir: str) -> tuple[T.StructType, str]:
     """Stream-read schema for the events table plus the ts read mode.
@@ -269,9 +274,7 @@ def streaming_dedup_probe(
         )
         if overflow:
             if not dropped[0]:
-                import logging
-
-                logging.getLogger(__name__).warning(
+                logger.warning(
                     "streaming_dedup_probe: default in-memory sink hit "
                     "max_collected=%d; further pairs are dropped — pass "
                     "a sink= callback for unbounded streams",

@@ -146,3 +146,100 @@ def test_audit_detects_broken_plans(spark):
     cross = spark.range(5).crossJoin(spark.range(5).selectExpr("id AS j"))
     a2 = audit(cross._jdf.queryExecution().executedPlan().toString())
     assert a2["nested_loop_joins"] >= 1
+
+
+# ---------------------------------------------------------------------------
+# job-count pins: on this kind of host every Spark job costs a fixed
+# ~200 ms whatever its size, so the floor-bound table paths are pinned
+# by how many jobs they launch, counted through the status tracker
+
+
+def _jobs_in(spark, fn):
+    """(result of ``fn()``, ids of the Spark jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _four_file_table(spark, root: str):
+    from pyspark.sql import functions as F
+
+    from tagminder_spark.operators.table_manifest import init_manifest
+
+    (
+        spark.range(0, 400, 1, 4)
+        .select(F.col("id").alias("doc_id"),
+                F.concat(F.lit("t"), F.col("id")).alias("title"))
+        .write.parquet(root)
+    )
+    init_manifest(spark, root, stats_cols=("doc_id",))
+
+
+def test_snapshot_read_launches_no_job(spark, tmp_path):
+    """A committed table records its schema, so planning a snapshot
+    read infers nothing — zero jobs — with and without a pending
+    positional delete."""
+    from tagminder_spark.operators.table_manifest import (
+        delete_where,
+        snapshot_read,
+    )
+
+    root = str(tmp_path / "t")
+    _four_file_table(spark, root)
+    df, jobs = _jobs_in(spark, lambda: snapshot_read(spark, root))
+    assert jobs == [], f"plain snapshot read launched jobs {jobs}"
+    assert df.count() == 400
+    delete_where(spark, root, [("doc_id", "<", 10)])
+    df, jobs = _jobs_in(spark, lambda: snapshot_read(spark, root))
+    assert jobs == [], f"read with a positional delete launched {jobs}"
+    assert df.count() == 390
+
+
+def test_parse_tags_one_task_per_core(spark):
+    """The tag parse runs at most one Python task per core: a 20-split
+    input is coalesced (no shuffle) before the mapInPandas."""
+    from tagminder_spark.sources.catalog import parse_tags
+
+    files = spark.range(0, 20, 1, 20).selectExpr("cast(id AS string) AS path")
+    parsed = parse_tags(files)
+    n = parsed.rdd.getNumPartitions()
+    assert n <= spark.sparkContext.defaultParallelism, n
+    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    assert audit(plan)["shuffles"] == 0
+
+
+#: jobs of merge_into_manifest updating 3 rows of a 4-file table, as
+#: measured: the touched-file probe, the rewrite of the touched file
+#: and the CDC change-file write, with their exchange and broadcast
+#: jobs.  It was 8 while both snapshot reads inside the merge inferred
+#: the table schema.
+MERGE_JOBS_MAX = 6
+
+
+def test_merge_into_manifest_job_count(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from tagminder_spark.operators.table_manifest import (
+        merge_into_manifest,
+        snapshot_read,
+    )
+
+    root = str(tmp_path / "t")
+    _four_file_table(spark, root)
+    upd = spark.range(0, 3).select(
+        F.col("id").alias("doc_id"), F.lit("new").alias("title")
+    )
+    rep, jobs = _jobs_in(
+        spark, lambda: merge_into_manifest(spark, root, upd, "doc_id")
+    )
+    assert rep["files_rewritten"] == 1
+    assert len(jobs) <= MERGE_JOBS_MAX, f"{len(jobs)} jobs: {jobs}"
+    assert snapshot_read(spark, root).filter("title = 'new'").count() == 3

@@ -4591,3 +4591,123 @@ def test_eq_rels_for_group_conservative_paths(tmp_path):
     finally:
         tm._delete_file_col_bounds = orig
 
+
+
+# ---------------------------------------------------------------------------
+# recorded table schema: reads hand Spark the schema instead of inferring
+
+
+def _assert_schema_pinned(spark, root: str):
+    """The manifest records a schema, and a snapshot read with it is
+    exactly what Spark infers from the same file list."""
+    import os
+
+    from tagminder_spark.operators.table_manifest import (
+        read_manifest,
+        snapshot_read,
+    )
+
+    man = read_manifest(spark, root)
+    assert man["schema"] is not None, man["generation"]
+    inferred = spark.read.option("basePath", root).parquet(
+        *[os.path.join(root, rel) for rel, _ in man["files"]]
+    ).schema
+    assert snapshot_read(spark, root).schema == inferred
+
+
+def test_recorded_schema_matches_inferred(spark, tmp_path):
+    """Each schema-preserving commit keeps the schema init_manifest
+    inferred, and the pinned read schema equals Spark's inference over
+    the committed files: after a same-schema append, a merge, a
+    positional delete and a rollback on an unpartitioned table, and
+    after a ``lang``-partitioned append and a compaction on a
+    partitioned one."""
+    from pyspark.sql import functions as F
+
+    from tagminder_spark.operators.table_manifest import (
+        append_files,
+        compact_partitions_versioned,
+        delete_where,
+        merge_into_manifest,
+        rollback,
+    )
+
+    root = str(tmp_path / "flat")
+    docs = _clustered_docs(spark, root, n_files=4)
+    _assert_schema_pinned(spark, root)
+    append_files(
+        spark, docs.limit(5).withColumn("doc_id", F.col("doc_id") + 10**9),
+        root, partition_col=None,
+    )
+    _assert_schema_pinned(spark, root)
+    upd = docs.limit(3).withColumn("n_chars", F.lit(7).cast("long"))
+    merge_into_manifest(spark, root, upd, "doc_id")
+    _assert_schema_pinned(spark, root)
+    lo = docs.agg(F.min("doc_id")).first()[0]
+    assert delete_where(spark, root, [("doc_id", "<=", lo + 5)])[
+        "rows_deleted"] > 0
+    _assert_schema_pinned(spark, root)
+    rollback(spark, root, 1)
+    _assert_schema_pinned(spark, root)
+
+    proot = str(tmp_path / "by_lang")
+    full = _fragmented_table(spark, proot)
+    from tagminder_spark.operators.table_manifest import init_manifest
+
+    init_manifest(spark, proot)
+    _assert_schema_pinned(spark, proot)
+    append_files(spark, full.limit(4), proot, partition_col="lang")
+    _assert_schema_pinned(spark, proot)
+    compact_partitions_versioned(
+        spark, proot, "lang", ["en"], target_bytes=4 << 20
+    )
+    _assert_schema_pinned(spark, proot)
+
+
+def test_evolved_append_records_no_schema(spark, tmp_path):
+    """An append whose batch writes a different schema records none:
+    reads fall back to inference, so the table reads as it did before
+    schemas were recorded — and later commits carry the unknown."""
+    from pyspark.sql import functions as F
+
+    from tagminder_spark.operators.table_manifest import (
+        append_files,
+        merge_into_manifest,
+        read_manifest,
+        snapshot_read,
+    )
+
+    root = str(tmp_path / "t")
+    docs = _clustered_docs(spark, root, n_files=2)
+    assert read_manifest(spark, root)["schema"] is not None
+    wide = docs.limit(3).withColumn("extra", F.lit("x"))
+    append_files(spark, wide, root, partition_col=None)
+    assert read_manifest(spark, root)["schema"] is None
+    assert snapshot_read(spark, root).count() == docs.count() + 3
+    cur = snapshot_read(spark, root)
+    merge_into_manifest(
+        spark, root, cur.limit(2).withColumn("n_chars", F.lit(1).cast("long")),
+        "doc_id",
+    )
+    assert read_manifest(spark, root)["schema"] is None
+
+
+def test_delete_where_zero_match_scanned_no_commit(spark, tmp_path):
+    """A predicate that survives pruning but matches no row: the match
+    count comes from the delete-file write, the result is zero rows
+    deleted, nothing is committed and the stage directory is gone."""
+    import os
+
+    from tagminder_spark.operators.table_manifest import (
+        delete_where,
+        read_manifest,
+    )
+
+    root = str(tmp_path / "t")
+    _clustered_docs(spark, root, n_files=2)
+    gen = read_manifest(spark, root)["generation"]
+    rep = delete_where(spark, root, [("lang", "=", "no-such-lang")])
+    assert rep["rows_deleted"] == 0 and rep["files_scanned"] == 2
+    assert read_manifest(spark, root)["generation"] == gen
+    assert not [n for n in os.listdir(root) if n.startswith(".__")]
+    assert not os.path.exists(os.path.join(root, "_deletes"))

@@ -3,12 +3,13 @@
 Usage: python tools/stage_profile.py <passes> <query> [query ...]
        (sf dir from $SPARK_GRAFT_SF_DIR, default sf0.1)
 
-Runs each query with the bench's timed region (build + noop sink) under
-spark.eventLog, then parses the event log into a per-query table of stages:
-wall (completion - launch of first task), executor run/CPU time summed over
-tasks, GC, shuffle read/write bytes, spill, task count — the same numbers
-the Stages tab would show (spark.ui is disabled in this sandbox).  Stages
-are attributed to queries via setJobDescription.
+Runs each query through the bench's timed region (``bench._run_once``:
+build + noop sink, persistent-RDD sweep after) under spark.eventLog, then
+parses the event log into a per-query table of stages: wall (completion -
+launch of first task), executor run/CPU time summed over tasks, GC,
+shuffle read/write bytes, spill, task count — the same numbers the Stages
+tab would show (the session disables spark.ui).  Stages are
+attributed to queries via setJobDescription.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ import json
 import os
 import sys
 import tempfile
-import time
 from collections import defaultdict
 from pathlib import Path
 
@@ -33,6 +33,7 @@ def main() -> None:
         f"--conf spark.eventLog.dir=file://{evdir} pyspark-shell"
     )
     import __spark_entry__ as entry
+    from bench import _run_once
     from tagminder_spark.session import get_spark
 
     passes = int(sys.argv[1])
@@ -45,15 +46,8 @@ def main() -> None:
     for p in range(passes):
         for name in names:
             spark.sparkContext.setJobDescription(f"q::{name}::{p}")
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            t = time.perf_counter() - t0
+            t = _run_once(spark, qs, name, sf_dir)
             spark.sparkContext.setJobDescription(None)
-            for _rid, rdd in dict(
-                spark.sparkContext._jsc.getPersistentRDDs()
-            ).items():
-                rdd.unpersist()
             best[name] = min(best.get(name, 1e9), t)
             print(f"# pass{p} {name}: {t:.3f}s", file=sys.stderr)
     app_id = spark.sparkContext.applicationId
