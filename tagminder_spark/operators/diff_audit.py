@@ -15,7 +15,10 @@ whose *blank-normalized* values differ, explodes that array into
 changelog rows, and uses its size as the ``__sqlmodded`` increment.
 Both outputs derive from a single join — Catalyst computes the compare
 once; at scale the join co-partitions on the key and the changelog is an
-append-only sink (Delta/parquet).
+append-only sink.  Both land through the versioned table format:
+:func:`~tagminder_spark.operators.table_manifest.merge_into_manifest`
+for the updated rows, :func:`~tagminder_spark.operators.table_manifest.append_files`
+for the changelog.
 """
 
 from __future__ import annotations
@@ -95,270 +98,3 @@ def diff_audit(
     )
     return updated, changelog
 
-
-def merge_into_parquet(
-    spark,
-    table_dir: str,
-    updates: DataFrame,
-    key: str = "__path",
-    changelog: DataFrame | None = None,
-    changelog_dir: str | None = None,
-) -> None:
-    """Persist the diff-audit outputs without Delta: MERGE-by-rewrite for
-    the alib table (anti-join survivors ∪ updated rows → temp dir →
-    atomic directory swap) plus a plain append for the changelog.
-
-    This is the reference's UPDATE-in-transaction + changelog-insert
-    (tm_db.py:580-611) re-expressed for immutable storage. With Delta/
-    Iceberg available this becomes a real ``MERGE INTO`` + CDF append;
-    the rewrite keeps the same contract on bare parquet. At 100 TB the
-    table would be partitioned (e.g. by hash bucket of the key) and only
-    partitions containing updated keys rewritten — the anti-join below
-    prunes to those partitions automatically once the key is a partition
-    column prefix.
-    """
-    import shutil
-    from pathlib import Path
-
-    base = Path(table_dir)
-    # mergeSchema: the table may span schema generations (promoted overflow
-    # columns) — merging on one file's schema would silently drop them
-    existing = spark.read.option("mergeSchema", "true").parquet(str(base))
-    missing = [c for c in existing.columns if c not in updates.columns]
-    if missing:
-        raise ValueError(f"updates lack table columns: {missing}")
-
-    # The changelog's lineage reads the CURRENT table — materialize it to a
-    # staging dir before the swap deletes the files its plan references,
-    # but PUBLISH it only after the table swap succeeds (a mid-merge crash
-    # must not record changelog entries for updates that never landed).
-    staged_changelog = None
-    if changelog is not None and changelog_dir is not None:
-        staged_changelog = base.with_name(base.name + ".__changelog_stage__")
-        if staged_changelog.exists():
-            shutil.rmtree(staged_changelog)
-        changelog.write.mode("overwrite").parquet(str(staged_changelog))
-
-    survivors = existing.join(updates.select(key), key, "left_anti")
-    merged = survivors.unionByName(updates.select(*existing.columns))
-
-    tmp = base.with_name(base.name + ".__merge_tmp__")
-    merged.write.mode("overwrite").parquet(str(tmp))
-    _swap_dir(base, tmp)
-    if staged_changelog is not None:
-        _publish_parquet_files(staged_changelog, Path(changelog_dir))
-    # the session caches file listings per path — drop the stale entries
-    spark.catalog.refreshByPath(str(base))
-
-
-def _swap_dir(base, tmp, scratch=None) -> None:
-    """Replace directory ``base`` with ``tmp``, restoring ``base`` if the
-    second rename fails (no window where the table is simply gone)."""
-    import shutil
-
-    old = scratch if scratch is not None else base.with_name(base.name + ".__merge_old__")
-    if old.exists():
-        shutil.rmtree(old)
-    base.rename(old)
-    try:
-        tmp.rename(base)
-    except BaseException:
-        old.rename(base)  # roll back: restore the original table
-        raise
-    shutil.rmtree(old)
-
-
-def _publish_parquet_files(stage, dest) -> None:
-    """Move staged parquet part-files into the destination dir (append)."""
-    import shutil
-    import uuid
-
-    dest.mkdir(parents=True, exist_ok=True)
-    for f in stage.glob("*.parquet"):
-        f.rename(dest / f"part-{uuid.uuid4().hex}.parquet")
-    shutil.rmtree(stage)
-
-
-BUCKET_COL = "__bucket"
-
-
-def bucket_of(key_col: Column, n_buckets: int) -> Column:
-    """Stable bucket id for a key — xxhash64 is deterministic across
-    sessions/executors, so a key's bucket never moves between runs."""
-    return F.pmod(F.xxhash64(key_col.cast("string")), F.lit(n_buckets)).cast("int")
-
-
-def write_bucketed_parquet(
-    df: DataFrame, table_dir: str, key: str, n_buckets: int = 32
-) -> None:
-    """Lay the table out as ``table_dir/__bucket=N/`` hash partitions.
-
-    This is the 100 TB layout contract: MERGE then touches only the
-    buckets containing updated keys instead of rewriting the table.
-
-    The bucket modulus is persisted in a ``_n_buckets`` sidecar (the
-    underscore prefix keeps it invisible to Spark's file listing, like
-    ``_SUCCESS``): inferring it back from ``__bucket=N`` directory names
-    is wrong whenever the highest bucket received no rows at write time
-    — partitionBy creates no dir for empty buckets, the inferred modulus
-    shrinks, update keys rehash into the wrong bucket, and the survivor
-    anti-join quietly duplicates keys."""
-    from pathlib import Path
-
-    (
-        df.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
-        .repartition(BUCKET_COL)
-        .write.partitionBy(BUCKET_COL)
-        .mode("overwrite")
-        .parquet(table_dir)
-    )
-    (Path(table_dir) / "_n_buckets").write_text(str(n_buckets))
-
-
-def merge_into_bucketed_parquet(
-    spark,
-    table_dir: str,
-    updates: DataFrame,
-    key: str = "__path",
-    changelog: DataFrame | None = None,
-    changelog_dir: str | None = None,
-) -> list[int]:
-    """Pruned MERGE over a bucket-partitioned table: rewrite ONLY the
-    buckets whose keys appear in ``updates``; untouched bucket dirs are
-    neither read nor written. Returns the rewritten bucket ids.
-
-    Reference semantics: UPDATE-in-transaction + changelog insert
-    (/root/reference/src/tagminder/core/tm_db.py:580-611). The sub-linear
-    contract: cost ∝ |touched buckets| ≤ |updates|, not table size. Each
-    bucket swap rolls back on failure; bucket merges are idempotent, so
-    crash recovery is "re-run the merge". The changelog is staged before
-    any swap (its lineage reads current files) and published only after
-    every swap succeeds."""
-    import shutil
-    from pathlib import Path
-
-    base = Path(table_dir)
-    bucket_dirs = [
-        d for d in base.glob(f"{BUCKET_COL}=*") if d.name.split("=")[1].isdigit()
-    ]
-    if not bucket_dirs:
-        raise ValueError(f"{table_dir} is not bucket-partitioned (no {BUCKET_COL}=N dirs)")
-    sidecar = base / "_n_buckets"
-    if not sidecar.exists():
-        # Dir-name inference is NEVER safe: empty top buckets make an
-        # 8-bucket table look like a dense 4-bucket one (no hole to
-        # detect), updates rehash with the wrong modulus, and the
-        # survivor anti-join duplicates keys. Refuse instead of guess.
-        raise ValueError(
-            f"{table_dir}: missing _n_buckets sidecar — the write-time "
-            "bucket modulus cannot be recovered from directory names "
-            "(empty top buckets leave no dir). Rewrite the table with "
-            "write_bucketed_parquet, or create _n_buckets with the "
-            "original bucket count."
-        )
-    n_buckets = int(sidecar.read_text().strip())
-
-    upd = updates.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets)).persist()
-    # tiny driver-side list: at most n_buckets ints, NOT the update keys
-    touched = sorted(r[0] for r in upd.select(BUCKET_COL).distinct().collect())
-
-    staged_changelog = None
-    if changelog is not None and changelog_dir is not None:
-        staged_changelog = base.with_name(base.name + ".__changelog_stage__")
-        if staged_changelog.exists():
-            shutil.rmtree(staged_changelog)
-        changelog.write.mode("overwrite").parquet(str(staged_changelog))
-
-    for b in touched:
-        bdir = base / f"{BUCKET_COL}={b}"
-        upd_b = upd.filter(F.col(BUCKET_COL) == b).drop(BUCKET_COL)
-        if not bdir.exists():
-            bdir.mkdir(parents=True)
-            upd_b.write.mode("overwrite").parquet(str(bdir))
-            continue
-        existing_b = spark.read.option("mergeSchema", "true").parquet(str(bdir))
-        survivors = existing_b.join(upd_b.select(key), key, "left_anti")
-        merged = survivors.unionByName(upd_b.select(*existing_b.columns))
-        # dot-prefixed scratch dirs are invisible to Spark's partition
-        # discovery, so a reader of the whole table never sees them
-        tmp = base / f"._b{b}_tmp"
-        merged.write.mode("overwrite").parquet(str(tmp))
-        _swap_dir(bdir, tmp, scratch=base / f"._b{b}_old")
-
-    upd.unpersist()
-    if staged_changelog is not None:
-        _publish_parquet_files(staged_changelog, Path(changelog_dir))
-    spark.catalog.refreshByPath(str(base))
-    return touched
-
-
-def diff_audit_inline(
-    df: DataFrame,
-    step,
-    cols: list[str],
-    key: str = "__path",
-    script: str = "",
-) -> tuple[DataFrame, DataFrame]:
-    """diff_audit for MAP-ONLY steps — zero shuffle.
-
-    When ``step`` is a row-local transform (every column-local pipeline
-    step: 01-04, 07-11, 14*, 16, 17, 19-21), joining old vs new on the
-    key re-shuffles both sides for nothing: the old value is sitting in
-    the same row. This variant snapshots the tracked columns in-row
-    (``__old_*``), applies the step, and diffs within the projection —
-    the whole protocol stays inside one codegen stage.
-
-    ``step`` must preserve unrelated columns (withColumn-style steps do;
-    select-rebuilding steps like 01/03 drop the snapshots — use the
-    join-based ``diff_audit`` for those). Also prefer the join-based
-    variant for DEEP step compositions: the in-row diff inlines extra
-    copies of the step expression per tracked column, and past the
-    whole-stage-codegen size limit execution falls back to interpreted
-    mode — measured far slower than paying the join shuffle once.
-    """
-    snap = df.select(
-        "*", *[F.col(c).alias(f"__old_{c}") for c in cols if c in df.columns]
-    )
-    new = step(snap)
-    missing = [c for c in cols if f"__old_{c}" not in new.columns]
-    if missing:
-        raise ValueError(
-            f"step dropped the in-row snapshots for {missing}; "
-            "use join-based diff_audit for select-rebuilding steps"
-        )
-    present = [c for c in cols if c in df.columns]
-    structs = [
-        F.when(
-            ~_norm(F.col(f"__old_{c}")).eqNullSafe(_norm(F.col(c))),
-            F.struct(
-                F.lit(c).alias("column"),
-                _norm(F.col(f"__old_{c}")).alias("old_value"),
-                _norm(F.col(c)).alias("new_value"),
-            ),
-        )
-        for c in present
-    ]
-    with_changes = new.withColumn("__changes", F.array_compact(F.array(*structs)))
-    changed = with_changes.filter(F.size("__changes") > 0)
-    sqlmodded_old = (
-        F.coalesce(F.col("__sqlmodded").cast("int"), F.lit(0))
-        if "__sqlmodded" in df.columns
-        else F.lit(0)
-    )
-    updated = changed.withColumn(
-        "__sqlmodded", (sqlmodded_old + F.size("__changes")).cast("smallint")
-    ).drop("__changes", *[f"__old_{c}" for c in present])
-    changelog = (
-        changed.select(
-            F.col(key).cast("string").alias("alib_path"),
-            F.explode("__changes").alias("ch"),
-        )
-        .select(
-            "alib_path",
-            F.col("ch.column").alias("alib_column"),
-            F.col("ch.old_value").alias("old_value"),
-            F.col("ch.new_value").alias("new_value"),
-        )
-        .withColumn("script", F.lit(script))
-    )
-    return updated, changelog

@@ -375,11 +375,10 @@ def pl_chain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs once per side
     alib = scoped_persist(_chain_fixture(spark, sf_dir))
     cols = _CHAIN_COLS
-    # join-based diff on purpose: the five-step expression tree is deep,
-    # and the in-row variant (diff_audit_inline) would inline THREE more
-    # copies of it per tracked column — past whole-stage-codegen limits
-    # into interpreted fallback. The join boundary keeps the chain
-    # compiled once; inline is the right protocol for single steps.
+    # the join boundary keeps the five-step expression tree compiled
+    # once: diffing old and new within one row would inline more copies
+    # of the deep chain per tracked column, past whole-stage-codegen
+    # limits into interpreted fallback.
     # localCheckpoint on the chain side: same plan-truncation rationale
     # as pl_chain_manifest (driver analysis + per-task init of the
     # ~2k-node tree — guide §3.3 / §7.3).

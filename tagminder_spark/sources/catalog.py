@@ -289,10 +289,3 @@ def promote_extra_tags(frame: DataFrame, new_cols: list[str]) -> DataFrame:
         F.map_filter(F.col(EXTRA_TAGS_COL), lambda k, _: ~k.isin(*new_cols)),
     )
 
-
-def read_alib_merged(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read an alib table whose parquet files were written across schema
-    generations: mergeSchema unions the file schemas, and rows from files
-    predating a promoted column read as NULL for it (exactly SQLite's
-    ALTER TABLE ... ADD COLUMN semantics for existing rows)."""
-    return spark.read.option("mergeSchema", "true").parquet(table_dir)

@@ -145,8 +145,13 @@ def test_schema_evolution_ingest_survives_diff_audit(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from tagminder_spark.config import default_config, evolve_alib_schema
-    from tagminder_spark.operators.diff_audit import diff_audit, merge_into_parquet
-    from tagminder_spark.sources.catalog import read_alib_merged
+    from tagminder_spark.operators.diff_audit import diff_audit
+    from tagminder_spark.operators.table_manifest import (
+        append_files,
+        init_manifest,
+        merge_into_manifest,
+        snapshot_read,
+    )
 
     cfg = default_config()
     table = str(tmp_path / "alib")
@@ -155,6 +160,7 @@ def test_schema_evolution_ingest_survives_diff_audit(spark, tmp_path):
     spark.createDataFrame(
         [("p1", "T1", 0)], "__path string, title string, __sqlmodded int"
     ).write.parquet(table)
+    init_manifest(spark, table)
 
     # generation 2: ingest batch carrying an unknown tag key "mood"
     batch = spark.createDataFrame(
@@ -168,24 +174,29 @@ def test_schema_evolution_ingest_survives_diff_audit(spark, tmp_path):
     # promoted keys leave the overflow map
     assert evolved.select(F.size(F.map_keys("__extra_tags"))).collect()[0][0] == 0
 
-    evolved.drop("__extra_tags").write.mode("append").parquet(table)
+    append_files(spark, evolved.drop("__extra_tags"), table, partition_col=None)
 
     # mergeSchema union: old rows NULL for the promoted column
-    alib = read_alib_merged(spark, table)
-    assert "mood" in alib.columns and alib.count() == 3
-    assert alib.filter(F.col("__path") == "p1").collect()[0]["mood"] is None
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        alib = snapshot_read(spark, table)
+        assert "mood" in alib.columns and alib.count() == 3
+        assert alib.filter(F.col("__path") == "p1").collect()[0]["mood"] is None
 
-    # the promoted column flows through a diff-audited step + merge
-    from tagminder_spark.pipeline import step02_clean_text
+        # the promoted column flows through a diff-audited step + merge
+        from tagminder_spark.pipeline import step02_clean_text
 
-    updated, changelog = diff_audit(
-        alib, step02_clean_text(alib, ("mood",)), "__path", ["mood"], script="02"
-    )
-    # changelog lineage reads the pre-merge files: consume it before the
-    # swap (merge_into_parquet stages it internally when given a dir)
-    assert [r.alib_column for r in changelog.collect()] == ["mood"]
-    merge_into_parquet(spark, table, updated, "__path")
-    after = {r["__path"]: r["mood"] for r in read_alib_merged(spark, table).collect()}
+        updated, changelog = diff_audit(
+            alib, step02_clean_text(alib, ("mood",)), "__path", ["mood"],
+            script="02",
+        )
+        assert [r.alib_column for r in changelog.collect()] == ["mood"]
+        merge_into_manifest(spark, table, updated, "__path")
+        after = {
+            r["__path"]: r["mood"] for r in snapshot_read(spark, table).collect()
+        }
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
     assert after == {"p1": None, "p2": "calm", "p3": "loud"}
 
     # gate off → no promotion

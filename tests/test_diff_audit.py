@@ -3,8 +3,6 @@ logging, blank-equivalence, idempotency/convergence."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from tagminder_spark.operators.diff_audit import diff_audit
 
 
@@ -64,208 +62,3 @@ def test_sqlmodded_accumulates(spark):
     updated, _ = diff_audit(old, new, "path", ["title", "artist"], "t")
     assert updated.collect()[0]["__sqlmodded"] == 5  # 3 prior + 2 new changes
 
-
-def test_merge_into_parquet_roundtrip(spark, tmp_path):
-    from tagminder_spark.operators.diff_audit import diff_audit, merge_into_parquet
-
-    table = tmp_path / "alib"
-    spark.createDataFrame(
-        [("p1", "Old\r\n", 0), ("p2", "Keep", 0), ("p3", "  ", 0)],
-        "__path string, title string, __sqlmodded int",
-    ).write.parquet(str(table))
-
-    alib = spark.read.parquet(str(table))
-    from tagminder_spark.pipeline import step02_clean_text
-
-    updated, changelog = diff_audit(
-        alib, step02_clean_text(alib, ("title",)), "__path", ["title"], script="02"
-    )
-    merge_into_parquet(
-        spark, str(table), updated, "__path", changelog, str(tmp_path / "changelog")
-    )
-
-    after = {
-        r["__path"]: (r["title"], r["__sqlmodded"])
-        for r in spark.read.parquet(str(table)).collect()
-    }
-    # p3's whitespace→NULL normalizes equal, so it is deliberately NOT
-    # rewritten or logged ("only log what actually changed after
-    # normalization", tm_changes.py:1-16)
-    assert after == {"p1": ("Old", 1), "p2": ("Keep", 0), "p3": ("  ", 0)}
-    cl = spark.read.parquet(str(tmp_path / "changelog"))
-    assert cl.count() == 1
-
-    # idempotency through the full persistence loop: second run is a no-op
-    alib2 = spark.read.parquet(str(table))
-    updated2, changelog2 = diff_audit(
-        alib2, step02_clean_text(alib2, ("title",)), "__path", ["title"], script="02"
-    )
-    assert updated2.count() == 0 and changelog2.count() == 0
-
-
-def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
-    from tagminder_spark.operators.diff_audit import (
-        BUCKET_COL,
-        diff_audit,
-        merge_into_bucketed_parquet,
-        write_bucketed_parquet,
-    )
-
-    table = str(tmp_path / "alib_bucketed")
-    n = 200
-    rows = [(f"p{i:04d}", f"T{i}\r\n" if i < 5 else f"T{i}", 0) for i in range(n)]
-    base = spark.createDataFrame(rows, "__path string, title string, __sqlmodded int")
-    write_bucketed_parquet(base, table, "__path", n_buckets=16)
-
-    # snapshot per-file state of every bucket dir before the merge
-    import os
-    from pathlib import Path
-
-    def filestate():
-        out = {}
-        for d in Path(table).glob(f"{BUCKET_COL}=*"):
-            out[d.name] = sorted(
-                (f.name, f.stat().st_size, f.stat().st_mtime_ns)
-                for f in d.glob("*.parquet")
-            )
-        return out
-
-    before = filestate()
-    alib = spark.read.parquet(table).drop(BUCKET_COL)
-    from tagminder_spark.pipeline import step02_clean_text
-
-    updated, changelog = diff_audit(
-        alib, step02_clean_text(alib, ("title",)), "__path", ["title"], script="02"
-    )
-    touched = merge_into_bucketed_parquet(
-        spark, table, updated, "__path", changelog, str(tmp_path / "cl")
-    )
-    after = filestate()
-
-    # only the touched buckets changed — sub-linear rewrite, proved on files
-    assert 0 < len(touched) < 16
-    for name, state in before.items():
-        b = int(name.split("=")[1])
-        if b in touched:
-            assert after[name] != state
-        else:
-            assert after[name] == state, f"untouched bucket {name} was rewritten"
-
-    # and the merge is correct + idempotent through the pruned path
-    got = {
-        r["__path"]: (r["title"], r["__sqlmodded"])
-        for r in spark.read.parquet(table).collect()
-    }
-    assert len(got) == n
-    for i in range(5):
-        assert got[f"p{i:04d}"] == (f"T{i}", 1)
-    assert got["p0100"] == ("T100", 0)
-    assert spark.read.parquet(str(tmp_path / "cl")).count() == 5
-
-    alib2 = spark.read.parquet(table).drop(BUCKET_COL)
-    updated2, _ = diff_audit(
-        alib2, step02_clean_text(alib2, ("title",)), "__path", ["title"], script="02"
-    )
-    assert updated2.count() == 0
-
-
-def test_merge_swap_rolls_back_on_failure(spark, tmp_path):
-    from pathlib import Path
-
-    from tagminder_spark.operators.diff_audit import _swap_dir
-
-    base = tmp_path / "t"
-    base.mkdir()
-    (base / "data.txt").write_text("original")
-    missing_tmp = tmp_path / "nope"  # rename will fail: source doesn't exist
-    try:
-        _swap_dir(base, missing_tmp)
-        raise AssertionError("expected swap failure")
-    except OSError:
-        pass
-    # the original table is back in place, not stranded under __merge_old__
-    assert (base / "data.txt").read_text() == "original"
-    assert not Path(str(base) + ".__merge_old__").exists()
-
-
-def test_diff_audit_inline_matches_join_variant(spark):
-    from tagminder_spark.operators.diff_audit import diff_audit, diff_audit_inline
-    from tagminder_spark.pipeline import step02_clean_text
-
-    alib = spark.createDataFrame(
-        [("p1", "Dirty\r\n", "keep", 0), ("p2", "Clean", "keep", 2)],
-        "__path string, title string, other string, __sqlmodded int",
-    )
-    step = lambda d: step02_clean_text(d, ("title",))  # noqa: E731
-    u1, c1 = diff_audit(alib, step(alib), "__path", ["title"], script="02")
-    u2, c2 = diff_audit_inline(alib, step, ["title"], script="02")
-    assert sorted(map(tuple, u1.select(*u2.columns).collect())) == sorted(
-        map(tuple, u2.collect())
-    )
-    assert sorted(map(tuple, c1.collect())) == sorted(map(tuple, c2.collect()))
-    # zero-shuffle claim: no Exchange in the inline plan
-    plan = u2._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_bucketed_merge_with_empty_top_buckets(spark, tmp_path):
-    """ADVICE r2: when the highest bucket(s) get no rows, partitionBy
-    creates no dir for them; the modulus must come from the _n_buckets
-    sidecar, not dir inference — else update keys rehash wrongly and the
-    merge duplicates keys."""
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.diff_audit import (
-        BUCKET_COL,
-        bucket_of,
-        merge_into_bucketed_parquet,
-        write_bucketed_parquet,
-    )
-
-    n_buckets = 8
-    base = spark.range(200).select(
-        F.concat(F.lit("/f"), F.col("id").cast("string")).alias("__path"),
-        F.lit("old").alias("v"),
-    )
-    # keep only rows whose bucket is 0..3: buckets 4..7 stay empty,
-    # so dir inference would see modulus 4, not 8
-    base = base.filter(bucket_of(F.col("__path"), n_buckets) <= 3)
-    table = str(tmp_path / "tbl")
-    write_bucketed_parquet(base, table, "__path", n_buckets=n_buckets)
-    import os
-
-    dirs = [d for d in os.listdir(table) if d.startswith(BUCKET_COL)]
-    assert len(dirs) < n_buckets  # the hazard is real
-    assert (tmp_path / "tbl" / "_n_buckets").read_text() == str(n_buckets)
-
-    updates = base.limit(50).withColumn("v", F.lit("new"))
-    merge_into_bucketed_parquet(spark, table, updates, "__path")
-    out = spark.read.parquet(table)
-    # no duplicated keys, updates applied
-    assert out.count() == out.select("__path").distinct().count()
-    assert out.filter(F.col("v") == "new").count() == 50
-
-
-def test_bucketed_merge_sparse_legacy_refuses(spark, tmp_path):
-    """A legacy table with sparse bucket dirs and no sidecar is
-    ambiguous — the merge must refuse rather than guess."""
-    import shutil
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from tagminder_spark.operators.diff_audit import (
-        bucket_of,
-        merge_into_bucketed_parquet,
-        write_bucketed_parquet,
-    )
-
-    base = spark.range(200).select(
-        F.concat(F.lit("/f"), F.col("id").cast("string")).alias("__path"),
-        F.lit("old").alias("v"),
-    ).filter(bucket_of(F.col("__path"), 8) <= 3)
-    table = str(tmp_path / "tbl")
-    write_bucketed_parquet(base, table, "__path", n_buckets=8)
-    (tmp_path / "tbl" / "_n_buckets").unlink()  # simulate legacy table
-    with _pytest.raises(ValueError, match="sidecar"):
-        merge_into_bucketed_parquet(spark, table, base.limit(5), "__path")

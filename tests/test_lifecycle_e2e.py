@@ -4,10 +4,12 @@ The loop the reference runs daily (`tags2db.py` §3.1 import → pipeline →
 export), composed from the engine's real pieces over a REAL directory
 tree: synthesize 504 files across all 8 container families (disc
 subfolders included) → ``scan_files`` → ``parse_tags`` (bounded lazy IO)
-→ alib parquet → three pipeline steps through diff-audit MERGE (S5) →
-``export_tags`` write-back (streaming writer) → re-scan + re-parse,
-asserting tag equality against the final alib, stream preservation
-(duration + raw audio markers), and the ``__sqlmodded`` reset (99)."""
+→ manifest-versioned alib table → three pipeline steps through
+diff-audit MERGE (S5), each committed as ``merge_into_manifest`` plus a
+changelog ``append_files`` → ``export_tags`` write-back (streaming
+writer) → re-scan + re-parse, asserting tag equality against the final
+alib, stream preservation (duration + raw audio markers), and the
+``__sqlmodded`` reset (99)."""
 
 from __future__ import annotations
 
@@ -85,7 +87,12 @@ def _build_library(root) -> dict[str, dict]:
 
 
 def test_full_library_lifecycle(spark, tmp_path):
-    from tagminder_spark.operators.diff_audit import merge_into_parquet
+    from tagminder_spark.operators.table_manifest import (
+        append_files,
+        init_manifest,
+        merge_into_manifest,
+        snapshot_read,
+    )
     from tagminder_spark.pipeline.steps import (
         run_step,
         step02_clean_text,
@@ -122,6 +129,7 @@ def test_full_library_lifecycle(spark, tmp_path):
         "mp3", "flac", "ogg", "mp4", "aiff", "asf", "ape", "wavpack"
     }
     alib.write.parquet(table)
+    init_manifest(spark, table)
 
     # ---- pipeline: three steps through diff-audit MERGE (S5) ---------
     chain = [
@@ -131,15 +139,13 @@ def test_full_library_lifecycle(spark, tmp_path):
         (step20_dates, ["year"], "20"),
     ]
     for fn, cols, script in chain:
-        cur = spark.read.parquet(table)
+        cur = snapshot_read(spark, table)
         updated, changelog = run_step(cur, fn, cols, script)
-        merge_into_parquet(
-            spark, table, updated, "__path",
-            changelog=changelog, changelog_dir=chdir,
-        )
+        merge_into_manifest(spark, table, updated, "__path")
+        append_files(spark, changelog, chdir, partition_col=None)
 
-    final = spark.read.parquet(table)
-    chlog = spark.read.parquet(chdir)
+    final = snapshot_read(spark, table)
+    chlog = snapshot_read(spark, chdir)
     changed_paths = {
         r["alib_path"] for r in chlog.select("alib_path").distinct().collect()
     }

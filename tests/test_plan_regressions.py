@@ -243,3 +243,26 @@ def test_merge_into_manifest_job_count(spark, tmp_path):
     assert rep["files_rewritten"] == 1
     assert len(jobs) <= MERGE_JOBS_MAX, f"{len(jobs)} jobs: {jobs}"
     assert snapshot_read(spark, root).filter("title = 'new'").count() == 3
+
+
+#: jobs of a 1-row delete_where on a fresh 4-file table, as measured:
+#: the positional-delete write (its match count rides on it) and the
+#: CDC preimage write.  It was 3 while the first positional
+#: read on a table ran a one-task job to probe Spark's file-path prefix.
+DELETE_JOBS_MAX = 2
+
+
+def test_delete_where_job_count(spark, tmp_path):
+    from tagminder_spark.operators.table_manifest import (
+        delete_where,
+        snapshot_read,
+    )
+
+    root = str(tmp_path / "t")
+    _four_file_table(spark, root)
+    rep, jobs = _jobs_in(
+        spark, lambda: delete_where(spark, root, [("doc_id", "=", 7)])
+    )
+    assert rep["rows_deleted"] == 1
+    assert len(jobs) <= DELETE_JOBS_MAX, f"{len(jobs)} jobs: {jobs}"
+    assert snapshot_read(spark, root).count() == 399

@@ -4711,3 +4711,181 @@ def test_delete_where_zero_match_scanned_no_commit(spark, tmp_path):
     assert read_manifest(spark, root)["generation"] == gen
     assert not [n for n in os.listdir(root) if n.startswith(".__")]
     assert not os.path.exists(os.path.join(root, "_deletes"))
+
+
+def test_positional_identity_under_escaped_table_root(spark, tmp_path):
+    """A table root Spark spells URI-escaped (``t a%b`` →
+    ``file:/…/t%20a%25b`` in ``_metadata.file_path``): positional
+    deletes, their read-back, materialization and the Bloom index all
+    key on the table-relative rel path, whatever the root looks like."""
+    from tagminder_spark.operators.table_manifest import (
+        build_bloom_index,
+        delete_where,
+        init_manifest,
+        materialize_deletes,
+        read_manifest,
+        snapshot_read,
+    )
+
+    root = str(tmp_path / "t a%b")
+    spark.createDataFrame(
+        [(i, "en" if i % 2 == 0 else "fr") for i in range(100)],
+        "doc_id int, lang string",
+    ).write.partitionBy("lang").parquet(root)
+    init_manifest(spark, root)
+    rels = {rel for rel, _ in read_manifest(spark, root)["files"]}
+
+    side = build_bloom_index(spark, root, "doc_id")
+    indexed = {
+        r["rel"] for r in spark.read.parquet(
+            f"{root}/{side['sidecar']}").select("rel").collect()
+    }
+    assert indexed == rels
+
+    rep = delete_where(spark, root, [("doc_id", "<", 30)])
+    assert rep["rows_deleted"] == 30
+    named = {
+        r["file"] for r in spark.read.parquet(*[
+            f"{root}/{rel}" for rel, _s, _k
+            in read_manifest(spark, root)["deletes"]
+        ]).select("file").collect()
+    }
+    assert named <= rels
+    got = sorted(r["doc_id"] for r in snapshot_read(spark, root).collect())
+    assert got == list(range(30, 100))
+
+    mat = materialize_deletes(spark, root, partition_col="lang")
+    assert mat["files_rewritten"] > 0 and mat["delete_files_carried"] == 0
+    got = sorted(r["doc_id"] for r in snapshot_read(spark, root).collect())
+    assert got == list(range(30, 100))
+
+
+def test_expire_reclaims_delete_and_change_file_debris(spark, tmp_path):
+    """Delete and CDC files moved in before a failed commit live under
+    the ``_``-prefixed ``_deletes/`` and ``_changes/`` dirs, which the
+    data-file listing skips: the orphan reclaim scans them too, under
+    the same live set and age guard."""
+    import os
+
+    import tagminder_spark.operators.table_manifest as tm
+
+    root = str(tmp_path / "t")
+    _clustered_docs(spark, root, n_files=2)
+    lo = tm.snapshot_read(spark, root).agg({"doc_id": "min"}).first()[0]
+    tm.delete_where(spark, root, [("doc_id", "=", int(lo))])
+    live = tm.read_manifest(spark, root)["deletes"]
+    assert live
+
+    debris = [os.path.join(root, "_deletes", "pos_0123456789ab.parquet"),
+              os.path.join(root, "_changes", "cdc_0123456789ab.parquet")]
+    for p in debris:
+        with open(p, "wb") as f:
+            f.write(b"not really parquet")
+
+    out = tm.expire_snapshots(spark, root, keep_last=1,
+                              remove_unreferenced=True)
+    assert out["removed_files"] == []  # young: the age guard holds
+    out = tm.expire_snapshots(spark, root, keep_last=1,
+                              remove_unreferenced=True,
+                              min_unreferenced_age=0.0)
+    assert out["removed_files"] == [
+        "_changes/cdc_0123456789ab.parquet",
+        "_deletes/pos_0123456789ab.parquet",
+    ]
+    assert not any(os.path.exists(p) for p in debris)
+    for rel, _seq, _k in live:
+        assert os.path.exists(os.path.join(root, rel))
+    assert tm.snapshot_read(spark, root).count() == (
+        tm.snapshot_read(spark, root, 1).count() - 1
+    )
+
+
+def _files_under(root: str) -> set[str]:
+    """Every file under ``root`` outside the manifest dir, hidden stage
+    dirs included."""
+    import os
+
+    out = set()
+    for d, dirs, files in os.walk(root):
+        rel_d = os.path.relpath(d, root)
+        if rel_d.split(os.sep)[0] == "_manifest":
+            continue
+        out.update(os.path.normpath(os.path.join(rel_d, f)) for f in files)
+    return out
+
+
+@pytest.mark.parametrize(
+    "op", ["append_files", "merge_into_manifest", "merge_on_read",
+           "delete_where"],
+)
+def test_stage_move_crash_at_every_rename(spark, tmp_path, monkeypatch, op):
+    """Crash the stage-and-move at its k-th file rename, for every k,
+    until the write completes.  At each crash point a snapshot read
+    returns exactly the pre-write rows, and an orphan reclaim returns
+    the directory to exactly the pre-write file set — no moved data,
+    delete or change file and no stage dir survives."""
+    from pyspark.sql import functions as F
+
+    import tagminder_spark.operators.table_manifest as tm
+    from tagminder_spark.operators.compaction import _LocalFS
+
+    root = str(tmp_path / "t")
+    (
+        spark.range(0, 400, 1, 4)
+        .select(F.col("id").alias("doc_id"),
+                F.concat(F.lit("t"), F.col("id")).alias("title"))
+        .write.parquet(root)
+    )
+    tm.init_manifest(spark, root, stats_cols=("doc_id",))
+    upd = spark.range(0, 3).select(
+        F.col("id").alias("doc_id"), F.lit("new").alias("title")
+    )
+    write = {
+        "append_files": lambda: tm.append_files(
+            spark, upd.withColumn("doc_id", F.col("doc_id") + 1000), root,
+            partition_col=None),
+        "merge_into_manifest": lambda: tm.merge_into_manifest(
+            spark, root, upd, "doc_id"),
+        "merge_on_read": lambda: tm.merge_on_read(spark, root, upd, "doc_id"),
+        "delete_where": lambda: tm.delete_where(
+            spark, root, [("doc_id", "<", 10)]),
+    }[op]
+
+    def rows():
+        return sorted(map(tuple, tm.snapshot_read(spark, root).collect()))
+
+    pre_rows = rows()
+    pre_files = _files_under(root)
+    live = {rel for rel, _ in tm.read_manifest(spark, root)["files"]}
+    assert pre_files - {"_SUCCESS"} == live
+
+    real_rename = _LocalFS.rename
+    k = 0
+    while True:
+        k += 1
+        calls = []
+
+        def rename(self, src, dst, k=k, calls=calls):
+            calls.append(dst)
+            if len(calls) == k:
+                raise OSError(f"injected crash at rename {k}")
+            real_rename(self, src, dst)
+
+        monkeypatch.setattr(_LocalFS, "rename", rename)
+        try:
+            write()
+        except OSError as e:
+            assert "injected crash" in str(e)
+        else:
+            break
+        finally:
+            monkeypatch.setattr(_LocalFS, "rename", real_rename)
+        assert tm.list_generations(spark, root) == [1]
+        assert rows() == pre_rows, f"crash at rename {k}"
+        tm.expire_snapshots(spark, root, keep_last=1,
+                            remove_unreferenced=True,
+                            min_unreferenced_age=0)
+        assert _files_under(root) == pre_files, f"crash at rename {k}"
+    assert k > 1, "the write moved no file"
+    assert tm.list_generations(spark, root) == [1, 2]
+    assert rows() != pre_rows
