@@ -3192,11 +3192,12 @@ def compact_partitions_versioned(
     shaped = (
         df.repartitionByRange(n_out, *keys)
         .sortWithinPartitions(*keys)
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
     )
     if drop_after:
         shaped = shaped.drop(*drop_after)
     new = _stage_and_move(spark, fs, base, shaped, "compact",
-                          partition_col=partition_col, rows=obs)
+                          partition_col=partition_col)
     keep_rels = {rel for rel, _ in keep}
     stats = {
         rel: s for rel, s in man["stats"].items() if rel in keep_rels
